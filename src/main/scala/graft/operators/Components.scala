@@ -34,13 +34,12 @@ import org.apache.spark.sql.functions._
   * Scale shape: every round shuffles only (id, label) longs — the
   * frame is |nodes-in-pairs| rows, i.e. proportional to the NEAR-DUP
   * volume, not the corpus. The corpus itself is touched exactly once,
-  * by the caller's final left-join against the labels. Each round's
-  * labels are eagerly checkpointed and the previous round's blocks
-  * dropped, so neither lineage nor the logical plan grows across
-  * rounds; at 1000-executor scale this is the standard iterative
-  * label-propagation shape (cf. the large/small-star formulation in
-  * "Connected Components in MapReduce and Beyond", Kiveris et al.,
-  * SOCC'14 — the pointer-jump variant here has the same round bound
+  * by the caller's final left-join against the labels. The round loop
+  * is [[graft.Fixpoint]]'s, so neither lineage nor the logical plan
+  * grows across rounds; at 1000-executor scale this is the standard
+  * iterative label-propagation shape (cf. the large/small-star
+  * formulation in "Connected Components in MapReduce and Beyond",
+  * Kiveris et al., SOCC'14 — the pointer-jump variant here has the same round bound
   * for the small-diameter components near-dup graphs produce).
   */
 object Components {
@@ -63,63 +62,52 @@ object Components {
     */
   def labelWithStats(pairs: DataFrame, aCol: String, bCol: String,
       maxRounds: Int = 64, localMaxEdges: Long = 1L << 20): (DataFrame, Int) = {
-    // localCheckpoint, not cache: caching truncates EXECUTION but each
-    // round's LOGICAL plan would still nest every prior round's (~4
-    // references per round -> exponential plan trees; the chain-128
-    // fixture OOM'd just rendering plan strings). Checkpointing makes
-    // every round's plan a constant-size tree over two leaf relations.
-    // On a real cluster this is the same design with reliable
-    // checkpointing (localCheckpoint trades executor-loss tolerance
-    // for speed; the frames are (id,label) longs — near-dup-volume
-    // sized, orders of magnitude smaller than the corpus).
     val edges =
       pairs.select(col(aCol).cast("long").as("src"), col(bCol).cast("long").as("dst"))
         .union(pairs.select(col(bCol).cast("long").as("src"), col(aCol).cast("long").as("dst")))
         .distinct()
         .localCheckpoint(true)
     if (edges.count() <= localMaxEdges) return (localLabel(edges), 0)
-    var labels = edges.select(col("src").as("id")).distinct()
+    val init = edges.select(col("src").as("id")).distinct()
       .select(col("id"), col("id").as("label"))
-      .localCheckpoint(true)
     // exact change detection: labels only ever decrease, so the sum of
     // all labels is strictly decreasing until the fixpoint (decimal —
-    // a 38-digit sum cannot overflow on any realistic id space)
+    // a 38-digit sum cannot overflow on any realistic id space); each
+    // round's sum is kept for the next round's comparison
     def checksum(df: DataFrame): java.math.BigDecimal = {
       val d = df.agg(sum(col("label").cast("decimal(38,0)"))).head.getDecimal(0)
       if (d == null) java.math.BigDecimal.ZERO else d
     }
-    var prev = checksum(labels)
-    var rounds = 0
-    var converged = prev.signum == 0 && labels.isEmpty
-    while (!converged && rounds < maxRounds) {
-      rounds += 1
-      val nbrMin = edges
-        .join(labels.select(col("id").as("dst"), col("label").as("nbr_label")), "dst")
-        .groupBy(col("src")).agg(min(col("nbr_label")).as("nbr_min"))
-      val stepped = labels
-        .join(nbrMin.withColumnRenamed("src", "id"), Seq("id"), "left")
-        .select(col("id"), least(col("label"), coalesce(col("nbr_min"), col("label"))).as("label"))
-      val jumped = stepped.alias("s")
-        .join(stepped.select(col("id").as("graft_pid"), col("label").as("graft_plabel")),
-          col("s.label") === col("graft_pid"), "left")
-        .select(col("s.id").as("id"),
-          coalesce(col("graft_plabel"), col("s.label")).as("label"))
-      val next = jumped.localCheckpoint(true)
-      val cur = checksum(next)
-      labels.unpersist(blocking = false)
-      labels = next
-      converged = cur.compareTo(prev) == 0
-      prev = cur
+    var lastSum = Option.empty[java.math.BigDecimal]
+    def moved(next: DataFrame, prev: DataFrame): Boolean = {
+      val before = lastSum.getOrElse(checksum(prev))
+      lastSum = Some(checksum(next))
+      lastSum.get.compareTo(before) != 0
     }
     // Pointer jumping makes maxRounds (default 64 ~ diameter 2^64)
-    // effectively unreachable, but exiting here unconverged would mean
+    // effectively unreachable, but exiting unconverged would mean
     // callers (dropNearDups/q45) silently keep WRONG survivors — fail
     // loudly instead of corrupting data.
-    if (!converged)
-      throw new IllegalStateException(
-        s"Components.labelWithStats: not converged after $maxRounds rounds; " +
-          "raise maxRounds (labels were still changing)")
-    (labels, rounds)
+    graft.Fixpoint.converge(init, maxRounds,
+      s"Components.labelWithStats: not converged after $maxRounds rounds; " +
+        "raise maxRounds (labels were still changing)")(
+      (labels, _) => jump(edges, labels), moved)
+  }
+
+  /** One round: min over self and neighbours' labels, then one pointer
+    * jump label(x) ← label(label(x)). */
+  private def jump(edges: DataFrame, labels: DataFrame): DataFrame = {
+    val nbrMin = edges
+      .join(labels.select(col("id").as("dst"), col("label").as("nbr_label")), "dst")
+      .groupBy(col("src")).agg(min(col("nbr_label")).as("nbr_min"))
+    val stepped = labels
+      .join(nbrMin.withColumnRenamed("src", "id"), Seq("id"), "left")
+      .select(col("id"), least(col("label"), coalesce(col("nbr_min"), col("label"))).as("label"))
+    stepped.alias("s")
+      .join(stepped.select(col("id").as("graft_pid"), col("label").as("graft_plabel")),
+        col("s.label") === col("graft_pid"), "left")
+      .select(col("s.id").as("id"),
+        coalesce(col("graft_plabel"), col("s.label")).as("label"))
   }
 
   /** Sequential union-find over a collected edge list — the

@@ -34,6 +34,12 @@ object PageRank {
     * loop's lifetime (caller's CacheScope governs release).
     */
   def ranks(edges: DataFrame, iters: Int): DataFrame = {
+    val (r0, withDeg) = prepare(edges)
+    (1 to iters).foldLeft(r0)((r, _) => step(withDeg, r))
+  }
+
+  /** Initial (id, rank) frame and the degree-annotated edge frame. */
+  private def prepare(edges: DataFrame): (DataFrame, DataFrame) = {
     // deg is cached: it feeds the withDeg join AND seeds r0 (its src
     // set IS the node set under the symmetric-edge contract), so the
     // initial rank frame reads the tiny |V| cache instead of running
@@ -43,9 +49,7 @@ object PageRank {
       edges.groupBy(col("src")).agg(count(lit(1)).as("outdeg")))
     val withDeg = graft.CacheScope.trackedCache(
       edges.join(deg, "src").select(col("src"), col("dst"), col("outdeg")))
-    var r = deg.select(col("src").as("id"), lit(1000000L).as("rank"))
-    for (_ <- 1 to iters) r = step(withDeg, r)
-    r
+    (deg.select(col("src").as("id"), lit(1000000L).as("rank")), withDeg)
   }
 
   private def step(withDeg: DataFrame, r: DataFrame): DataFrame =
@@ -59,44 +63,21 @@ object PageRank {
   /** Loop-to-FIXPOINT variant (round-11 production form beside the
     * fixed-round oracle contract): iterate until the integer rank
     * vector stops changing — which, in exact integer arithmetic, is a
-    * true fixpoint, not an epsilon test. Returns (ranks, iters).
-    *
-    * Mechanics borrowed from Components.labelWithStats: every round is
-    * localCheckpoint'd so plans stay constant-size over two leaf
-    * relations (the 4^rounds recompute-tree lesson), change detection
-    * is one (id, rank) join + limit-1 count over the node-sized frame
-    * (the symmetric-edge contract keeps the node set constant, so an
-    * inner join sees every node), and a non-converged exit THROWS
-    * rather than returning a silently-wrong vector. Integer dynamics
-    * could in principle cycle with period > 1; that also surfaces as
-    * the fail-loud maxIters throw, never as a wrong answer.
-    * FixpointSpec pins fixpoint ≡ ranks(·, n) once converged and the
-    * invariance of further iteration.
+    * true fixpoint, not an epsilon test. Returns (ranks, iters), iters
+    * counting the final no-change iteration. The loop is
+    * [[graft.Fixpoint]]'s with its (id, rank) change probe; the
+    * symmetric-edge contract keeps the node set constant, so the
+    * probe's inner join sees every node. Integer dynamics could in
+    * principle cycle with period > 1; that surfaces as the fail-loud
+    * maxIters throw, never as a wrong answer. FixpointSpec pins
+    * fixpoint ≡ ranks(·, n) once converged and the invariance of
+    * further iteration.
     */
   def ranksToFixpoint(edges: DataFrame, maxIters: Int = 64): (DataFrame, Int) = {
-    val deg = graft.CacheScope.trackedCache(
-      edges.groupBy(col("src")).agg(count(lit(1)).as("outdeg")))
-    val withDeg = graft.CacheScope.trackedCache(
-      edges.join(deg, "src").select(col("src"), col("dst"), col("outdeg")))
-    var r = deg.select(col("src").as("id"), lit(1000000L).as("rank"))
-      .localCheckpoint(true)
-    var iters = 0
-    var converged = false
-    while (!converged && iters < maxIters) {
-      iters += 1
-      val next = step(withDeg, r).localCheckpoint(true)
-      val changed = next
-        .join(r.select(col("id"), col("rank").as("graft_prev")), Seq("id"))
-        .filter(col("rank") =!= col("graft_prev"))
-        .limit(1).count() > 0
-      r.unpersist(blocking = false)
-      r = next
-      converged = !changed
-    }
-    if (!converged)
-      throw new IllegalStateException(
-        s"PageRank.ranksToFixpoint: not converged after $maxIters iterations " +
-          "(still moving, or an integer limit cycle); raise maxIters")
-    (r, iters)
+    val (r0, withDeg) = prepare(edges)
+    graft.Fixpoint.converge(r0, maxIters,
+      s"PageRank.ranksToFixpoint: not converged after $maxIters iterations " +
+        "(still moving, or an integer limit cycle); raise maxIters")(
+      (r, _) => step(withDeg, r), graft.Fixpoint.changedOn("id", "rank"))
   }
 }

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.Q
+import graft.{CacheScope, Fixpoint, Q}
 
 /** q179: K-CORE PEELING (fixed rounds) over the support-pruned part
   * co-purchase graph — the density-tier decomposition completing the
@@ -21,17 +21,17 @@ import graft.Q
   * of the query contract so the DuckDB oracle can replay the
   * identical unrolled rounds (a data-dependent fixpoint has no
   * engine-independent SQL spelling — the q118 fixed-iteration rule;
-  * the spec pins a graph where 3 rounds HAVE converged, and the
-  * round-r frames are exposed for the cascade case).
+  * the spec pins graphs where 3 rounds HAVE converged and a path
+  * where the cap binds).
   *
   * Scale shape: one fact-collapsing distinct + one basket self-join
   * builds the support-pruned edge frame ONCE (cached; q128's
-  * measured collapse bounds it); each round is a degree aggregate
-  * over the CURRENT edge frame + two anti-joins — all bounded by the
-  * shrinking edge frame, nothing ever re-touches the fact. Isolated
-  * nodes (all edges peeled) are handled by degree-0 fill on the
-  * active-node frame, not by the edge aggregate that can't see them.
-  * All integers — hash-exact oracle.
+  * measured collapse bounds it); each round is two semi-joins of that
+  * frame against the active nodes + a degree aggregate + one join onto
+  * the (node, elim_round) ledger — all bounded by the edge frame,
+  * nothing ever re-touches the fact. Isolated nodes (all edges
+  * peeled) are handled by degree-0 fill on the ledger, not by the edge
+  * aggregate that can't see them. All integers — hash-exact oracle.
   */
 object KCore {
 
@@ -42,69 +42,16 @@ object KCore {
   /** Peel `rounds` synchronous rounds of the (pa, pb) edge frame at
     * threshold `k`. Emits every node of the input graph with its
     * elimination round (0 = survived all rounds, with its final
-    * degree; eliminated nodes carry a NULL final degree). Factored so
-    * the spec can pin a hand-built core-plus-tendril graph (the
-    * 2-round cascade), isolated-node removal, and convergence.
+    * degree; eliminated nodes carry a NULL final degree). This is the
+    * [[corePeelToFixpoint]] loop capped at `rounds` rounds, with no
+    * throw at the cap: peeling is monotone, so a fixpoint reached
+    * earlier yields the same rows. Factored so the spec can pin a
+    * hand-built core-plus-tendril graph (the 2-round cascade),
+    * isolated-node removal, convergence and a binding cap.
     */
   def corePeel(edges: DataFrame, k: Int, rounds: Int): DataFrame = {
-    // explode instead of union-of-two-projections: one pass over the
-    // (cached) edge frame per degree computation instead of two
-    def degrees(e: DataFrame): DataFrame =
-      e.select(explode(array(col("pa"), col("pb"))).as("node"))
-        .groupBy(col("node")).agg(count(lit(1)).as("graft_deg"))
-
-    val base = graft.CacheScope.trackedCache(edges)
-    // allNodes is cached: it anchors the ACTIVE frame of every round
-    // (active_r = allNodes minus the cached removal ledgers, a chain
-    // of broadcast anti-joins — the r13 spelling cached a fresh
-    // `active` frame per round, a materialization job whose content
-    // the tiny rm caches already determine) and the final assembly —
-    // uncached, each consumer re-ran the degree aggregate over base.
-    val allNodes = graft.CacheScope.trackedCache(
-      degrees(base).select(col("node")))
-
-    var rms = Seq.empty[DataFrame]
-    var cur = base
-    for (r <- 1 to rounds) {
-      val deg = degrees(cur)
-      // active = allNodes minus earlier removals: the rm frames are
-      // cached and tiny, so the anti-join chain re-derives active at
-      // each of its single uses per round without the 4^rounds
-      // recompute blowup that motivated the caches (rm is still
-      // referenced four times a round — ledger, active derivation,
-      // both edge anti-joins — and STAYS cached).
-      val active = rms.foldLeft(allNodes)((a, rm) =>
-        a.join(rm.select(col("node")), Seq("node"), "left_anti"))
-      val rm = graft.CacheScope.trackedCache(
-        active.join(deg, Seq("node"), "left")
-          .filter(coalesce(col("graft_deg"), lit(0L)) < k)
-          .select(col("node"), lit(r.toLong).as("elim_round")))
-      rms = rms :+ rm
-      val next = cur
-        .join(rm.select(col("node").as("pa")), Seq("pa"), "left_anti")
-        .join(rm.select(col("node").as("pb")), Seq("pb"), "left_anti")
-      // the FINAL round's edge frame has exactly one consumer (the
-      // final-degree aggregate) — caching it would be a pure write
-      cur = if (r < rounds) graft.CacheScope.trackedCache(next) else next
-    }
-    val removed =
-      if (rms.nonEmpty) rms.reduce(_ unionAll _)
-      else base.sparkSession.createDataFrame(
-        new java.util.ArrayList[org.apache.spark.sql.Row](),
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("node",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("elim_round",
-            org.apache.spark.sql.types.LongType))))
-    val finalDeg = degrees(cur)
-    allNodes
-      .join(removed, Seq("node"), "left")
-      .join(finalDeg, Seq("node"), "left")
-      .select(
-        col("node"),
-        coalesce(col("elim_round"), lit(0L)).as("elim_round"),
-        when(col("elim_round").isNull,
-          coalesce(col("graft_deg"), lit(0L))).as("final_deg"))
+    val base = CacheScope.trackedCache(edges)
+    assemble(base, Fixpoint.capped(fullLedger(base), rounds)(peelRound(base, k), Probe))
   }
 
   /** Loop-to-FIXPOINT peel (round-11 production form beside the
@@ -116,69 +63,56 @@ object KCore {
     * within |V| rounds is structural; maxRounds is the fail-loud
     * guard against a mis-sized cap, never a silent wrong answer.
     * Returns (result, rounds) where `rounds` counts peeling rounds
-    * that removed at least one node. Per round: the same bounded
-    * degree aggregate + anti-joins as corePeel, plus ONE count on the
-    * round's removal frame (already computed and cached — the
-    * convergence test is free beyond that count). Frames are
-    * localCheckpoint'd so the loop's plans stay constant-size
-    * (Components' 4^rounds recompute-tree lesson). FixpointSpec pins
-    * fixpoint ≡ corePeel(·, r) on converged fixtures and the chain
-    * cascade's round growth.
+    * that removed at least one node. The loop is [[graft.Fixpoint]]'s
+    * over the (node, elim_round) ledger. FixpointSpec pins fixpoint ≡
+    * corePeel(·, r) on converged fixtures and the chain cascade's
+    * round growth.
     */
   def corePeelToFixpoint(edges: DataFrame, k: Int,
       maxRounds: Int = 64): (DataFrame, Int) = {
-    def degrees(e: DataFrame): DataFrame =
-      e.select(explode(array(col("pa"), col("pb"))).as("node"))
-        .groupBy(col("node")).agg(count(lit(1)).as("graft_deg"))
-
-    val base = graft.CacheScope.trackedCache(edges)
-    val allNodes = degrees(base).select(col("node")).localCheckpoint(true)
-
-    var active = allNodes
-    var cur = base
-    var removed = cur.sparkSession.createDataFrame(
-      new java.util.ArrayList[org.apache.spark.sql.Row](),
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("node",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("elim_round",
-          org.apache.spark.sql.types.LongType))))
-    var rounds = 0
-    var converged = false
-    while (!converged && rounds < maxRounds) {
-      val r = rounds + 1
-      val deg = degrees(cur)
-      val rm = active.join(deg, Seq("node"), "left")
-        .filter(coalesce(col("graft_deg"), lit(0L)) < k)
-        .select(col("node"), lit(r.toLong).as("elim_round"))
-        .localCheckpoint(true)
-      if (rm.isEmpty) {
-        converged = true
-      } else {
-        rounds = r
-        removed = removed.unionAll(rm).localCheckpoint(true)
-        active = active.join(rm.select(col("node")), Seq("node"), "left_anti")
-          .localCheckpoint(true)
-        cur = cur.join(rm.select(col("node").as("pa")), Seq("pa"), "left_anti")
-          .join(rm.select(col("node").as("pb")), Seq("pb"), "left_anti")
-          .localCheckpoint(true)
-      }
-    }
-    if (!converged)
-      throw new IllegalStateException(
-        s"KCore.corePeelToFixpoint: still peeling after $maxRounds rounds; " +
-          "raise maxRounds")
-    val finalDeg = degrees(cur)
-    val out = allNodes
-      .join(removed, Seq("node"), "left")
-      .join(finalDeg, Seq("node"), "left")
-      .select(
-        col("node"),
-        coalesce(col("elim_round"), lit(0L)).as("elim_round"),
-        when(col("elim_round").isNull,
-          coalesce(col("graft_deg"), lit(0L))).as("final_deg"))
-    (out, rounds)
+    val base = CacheScope.trackedCache(edges)
+    val (ledger, rounds) = Fixpoint.converge(fullLedger(base), maxRounds,
+      s"KCore.corePeelToFixpoint: still peeling after $maxRounds rounds; " +
+        "raise maxRounds")(peelRound(base, k), Probe)
+    // the loop's last round is the one that removed nothing
+    (assemble(base, ledger), rounds - 1)
   }
+
+  // The peel state is one (node, elim_round) ledger over every node of
+  // the graph, 0 = still active; its node set never changes, so the
+  // shared (key, value) probe sees every removal.
+  private val Probe = Fixpoint.changedOn("node", "elim_round")
+
+  private def degrees(e: DataFrame): DataFrame =
+    // explode instead of union-of-two-projections: one pass over the
+    // edge frame instead of two
+    e.select(explode(array(col("pa"), col("pb"))).as("node"))
+      .groupBy(col("node")).agg(count(lit(1)).as("graft_deg"))
+
+  private def fullLedger(base: DataFrame): DataFrame =
+    degrees(base).select(col("node"), lit(0L).as("elim_round"))
+
+  /** The ledger with each node's degree over the edges whose endpoints
+    * are both still active — 0 once all its edges are gone, which the
+    * edge aggregate alone cannot see. */
+  private def withLiveDegree(base: DataFrame, ledger: DataFrame): DataFrame = {
+    val active = ledger.filter(col("elim_round") === 0L).select(col("node"))
+    val live = base
+      .join(active.withColumnRenamed("node", "pa"), Seq("pa"), "left_semi")
+      .join(active.withColumnRenamed("node", "pb"), Seq("pb"), "left_semi")
+    ledger.join(degrees(live), Seq("node"), "left")
+      .withColumn("graft_deg", coalesce(col("graft_deg"), lit(0L)))
+  }
+
+  /** Round r stamps r on every active node of degree below k. */
+  private def peelRound(base: DataFrame, k: Int)(ledger: DataFrame, r: Int): DataFrame =
+    withLiveDegree(base, ledger).select(col("node"),
+      when(col("elim_round") === 0L && col("graft_deg") < k, lit(r.toLong))
+        .otherwise(col("elim_round")).as("elim_round"))
+
+  private def assemble(base: DataFrame, ledger: DataFrame): DataFrame =
+    withLiveDegree(base, ledger).select(col("node"), col("elim_round"),
+      when(col("elim_round") === 0L, col("graft_deg")).as("final_deg"))
 
   /** Support-pruned co-purchase edges (pa < pb) — the q128/q170
     * graph. */

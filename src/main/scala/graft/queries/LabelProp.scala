@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.{CacheScope, Q}
+import graft.{CacheScope, Fixpoint, Q}
 
 /** q214: COMMUNITY DETECTION by synchronous LABEL PROPAGATION
   * (Raghavan, Albert & Kumara 2007, public) over the support-pruned
@@ -37,12 +37,17 @@ object LabelProp {
     * two-triangles-with-a-bridge fixture by hand.
     */
   def propagate(edges: DataFrame, rounds: Int): DataFrame = {
+    val (init, adj) = prepare(edges)
+    (1 to rounds).foldLeft(init)((labels, _) => modeLabel(adj, labels))
+  }
+
+  /** Initial (node, lbl = node) labels and the cached symmetric
+    * adjacency. */
+  private def prepare(edges: DataFrame): (DataFrame, DataFrame) = {
     val adj = CacheScope.trackedCache(
       edges.select(col("pa").as("node"), col("pb").as("nbr"))
         .unionAll(edges.select(col("pb").as("node"), col("pa").as("nbr"))))
-    val init = adj.select(col("node")).distinct()
-      .withColumn("lbl", col("node"))
-    (1 to rounds).foldLeft(init)((labels, _) => modeLabel(adj, labels))
+    (adj.select(col("node")).distinct().withColumn("lbl", col("node")), adj)
   }
 
   /** One synchronous round: every node adopts its neighbors' mode
@@ -68,45 +73,25 @@ object LabelProp {
 
   /** Loop-to-FIXPOINT variant (round-11 production form beside the
     * fixed-round oracle contract): propagate until no node's label
-    * changes. Returns (labels, rounds). Synchronous LPA is NOT
-    * guaranteed to converge — bipartite structures can oscillate with
-    * period 2 (Raghavan et al. §3 discuss the oscillation; the
-    * asynchronous variant trades determinism for guaranteed
-    * termination, the wrong trade for a verifiable engine) — so a
-    * non-converged exit THROWS at maxRounds rather than returning a
-    * mid-oscillation labeling. Each round is localCheckpoint'd
-    * (constant-size plans) and convergence is one (node, lbl) join +
-    * limit-1 count on the node-sized label frame. FixpointSpec pins
-    * fixpoint ≡ propagate(·, r) once converged plus the two-triangle
-    * fixture's round count.
+    * changes. Returns (labels, rounds), rounds counting the final
+    * no-change round. Synchronous LPA is NOT guaranteed to converge —
+    * bipartite structures can oscillate with period 2 (Raghavan et al.
+    * §3 discuss the oscillation; the asynchronous variant trades
+    * determinism for guaranteed termination, the wrong trade for a
+    * verifiable engine) — so a non-converged exit THROWS at maxRounds
+    * rather than returning a mid-oscillation labeling. The loop is
+    * [[graft.Fixpoint]]'s with its (node, lbl) change probe.
+    * FixpointSpec pins fixpoint ≡ propagate(·, r) once converged plus
+    * the two-triangle fixture's round count.
     */
   def propagateToFixpoint(edges: DataFrame,
       maxRounds: Int = 64): (DataFrame, Int) = {
-    val adj = CacheScope.trackedCache(
-      edges.select(col("pa").as("node"), col("pb").as("nbr"))
-        .unionAll(edges.select(col("pb").as("node"), col("pa").as("nbr"))))
-    var labels = adj.select(col("node")).distinct()
-      .withColumn("lbl", col("node"))
-      .localCheckpoint(true)
-    var rounds = 0
-    var converged = false
-    while (!converged && rounds < maxRounds) {
-      rounds += 1
-      val next = modeLabel(adj, labels).localCheckpoint(true)
-      val changed = next
-        .join(labels.select(col("node"), col("lbl").as("graft_prev")), Seq("node"))
-        .filter(col("lbl") =!= col("graft_prev"))
-        .limit(1).count() > 0
-      labels.unpersist(blocking = false)
-      labels = next
-      converged = !changed
-    }
-    if (!converged)
-      throw new IllegalStateException(
-        s"LabelProp.propagateToFixpoint: not converged after $maxRounds " +
-          "rounds (still moving, or a synchronous-LPA oscillation); " +
-          "raise maxRounds or break the oscillating structure")
-    (labels, rounds)
+    val (init, adj) = prepare(edges)
+    Fixpoint.converge(init, maxRounds,
+      s"LabelProp.propagateToFixpoint: not converged after $maxRounds " +
+        "rounds (still moving, or a synchronous-LPA oscillation); " +
+        "raise maxRounds or break the oscillating structure")(
+      (labels, _) => modeLabel(adj, labels), Fixpoint.changedOn("node", "lbl"))
   }
 
   val q214 = Q.of(

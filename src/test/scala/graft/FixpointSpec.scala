@@ -1,9 +1,11 @@
 package graft
 
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.functions.{col, least, lit}
 import org.apache.spark.sql.types.StructType
 
-import graft.operators.PageRank
+import graft.operators.{Components, PageRank}
 import graft.queries.{KCore, LabelProp}
 
 /** Loop-to-fixpoint variants of the iterative tier (VERDICT r10 next
@@ -29,6 +31,9 @@ class FixpointSpec extends SparkSpec {
       (pairs ++ pairs.map(_.swap))
         .map { case (a, b) => Row(a, b) }.asJava,
       StructType.fromDDL("src BIGINT, dst BIGINT"))
+
+  /** The n-node path 1 - 2 - ... - n. */
+  private def chain(n: Long) = (1L until n).map(i => (i, i + 1))
 
   // triangle {1,2,3}, triangle {4,5,6}, bridge 3-4 (LabelPropSpec's)
   private val bridged = Seq((1L, 2L), (1L, 3L), (2L, 3L),
@@ -89,7 +94,6 @@ class FixpointSpec extends SparkSpec {
       // a path of n nodes at k = 2 loses both endpoints each round:
       // rounds = ceil(n / 2) — peel depth is a GRAPH property
       // (cascade length), independent of how many such chains exist
-      def chain(n: Long) = (1L until n).map(i => (i, i + 1))
       val (out8, r8) = KCore.corePeelToFixpoint(edges(chain(8)), k = 2)
       val (out16, r16) = KCore.corePeelToFixpoint(edges(chain(16)), k = 2)
       assert(r8 == 4 && r16 == 8, s"chain peel depths: got $r8/$r16, want 4/8")
@@ -101,6 +105,67 @@ class FixpointSpec extends SparkSpec {
         (1L until 8L).map(i => (c * 100 + i, c * 100 + i + 1)))
       val (_, rMany) = KCore.corePeelToFixpoint(edges(many), k = 2)
       assert(rMany == 4, s"10 parallel chains took $rMany rounds, want 4")
+    }
+  }
+
+  test("kcore fixpoint frees every superseded round's checkpoint") {
+    // a 64-node path peels in 32 rounds, an 8-node path in 4; with each
+    // superseded round released, both end holding the same RDDs (the
+    // cached edge frame and the final ledger)
+    def newPersistentRdds(n: Long): Int = CacheScope.withCacheScope {
+      val before = spark.sparkContext.getPersistentRDDs.keySet
+      val (out, rounds) = KCore.corePeelToFixpoint(edges(chain(n)), k = 2)
+      assert(rounds == n / 2)
+      out.collect()
+      (spark.sparkContext.getPersistentRDDs.keySet -- before).size
+    }
+    val short = newPersistentRdds(8)
+    val long = newPersistentRdds(64)
+    info(s"new persistent RDDs: 8-node path $short, 64-node path $long")
+    assert(long <= short, s"64-node peel left $long new persistent RDDs, 8-node $short")
+  }
+
+  test("the loop releases each state once superseded and keeps the last") {
+    // the step holds every state it is given, so none can vanish from
+    // the persistent-RDD registry by garbage collection: only an
+    // explicit release removes it
+    import spark.implicits._
+    def persisted(df: DataFrame) = spark.sparkContext.getPersistentRDDs
+      .contains(df.queryExecution.logical.asInstanceOf[LogicalRDD].rdd.id)
+    val init = Seq((1L, 0L), (2L, 0L)).toDF("k", "v")
+    val seen = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    val step: Fixpoint.Step = (s, _) => {
+      seen += s
+      s.select(col("k"), least(col("v") + 1L, lit(3L)).as("v"))
+    }
+    // v climbs 0 -> 3; the fourth round verifies no change
+    val (last, rounds) = Fixpoint.converge(init, 8, "toy")(step, Fixpoint.changedOn("k", "v"))
+    assert(rounds == 4 && seen.size == 4)
+    assert(!seen.exists(persisted), "a superseded round is still persisted")
+    assert(persisted(last))
+    assert(last.collect().map(_.getLong(1)).toSeq == Seq(3L, 3L))
+    // capped: two rounds, no throw
+    val capped = Fixpoint.capped(init, 2)(step, Fixpoint.changedOn("k", "v"))
+    assert(capped.collect().map(_.getLong(1)).toSeq == Seq(2L, 2L))
+  }
+
+  // ---- every Fixpoint user ----
+
+  test("every fixpoint operator fails loud at its round cap, naming itself") {
+    CacheScope.withCacheScope {
+      import spark.implicits._
+      val cases: Seq[(String, () => Any)] = Seq(
+        "PageRank.ranksToFixpoint" ->
+          (() => PageRank.ranksToFixpoint(sym(bridged), maxIters = 1)),
+        "KCore.corePeelToFixpoint" ->
+          (() => KCore.corePeelToFixpoint(edges(chain(16)), k = 2, maxRounds = 4)),
+        "Components.labelWithStats" ->
+          (() => Components.labelWithStats(chain(64).toDF("doc_a", "doc_b"),
+            "doc_a", "doc_b", maxRounds = 2, localMaxEdges = 0L)))
+      for ((op, run) <- cases) {
+        val ex = intercept[IllegalStateException](run())
+        assert(ex.getMessage.startsWith(op + ":"), s"$op threw: ${ex.getMessage}")
+      }
     }
   }
 

@@ -111,6 +111,18 @@ class GraphMetricsSpec extends SparkSpec {
     assert(out(1L) == ((2L, -1L)))
   }
 
+  test("q179 binding cap: an unconverged peel stops at round R") {
+    // a 16-node path at k = 2 loses both ends every round and needs 8
+    // rounds; capped at 3, nodes 1/16, 2/15, 3/14 fall in rounds 1-3
+    // and 4..13 survive with the new ends 4 and 13 at degree 1
+    val out = peel((1L until 16L).map(i => (i, i + 1)), 2, rounds = 3)
+    val want = (1L to 16L).map { v =>
+      val depth = math.min(v, 17L - v)
+      v -> (if (depth <= 3) (depth, -1L) else (0L, if (depth == 4) 1L else 2L))
+    }.toMap
+    assert(out == want)
+  }
+
   test("q179 converged graph: extra rounds change nothing") {
     val k4 = Seq((1L, 2L), (1L, 3L), (1L, 4L), (2L, 3L), (2L, 4L), (3L, 4L))
     val g = k4 ++ Seq((4L, 5L), (5L, 6L))

@@ -12,7 +12,9 @@
 #    not) is re-run through Verify at sf0.001 and hash-compared with
 #    its DuckDB oracle via tools/check.py. New queries are picked up
 #    by their Q.of("name") literal, so registering a query in the same
-#    commit that creates it is exactly the case this covers.
+#    commit that creates it is exactly the case this covers. A touched
+#    file that defines no query (an operator, a core file, a deleted
+#    file) can reach any query, so then the whole registry is checked.
 # Rule of use (SURVEY §6(e)): run before EVERY commit that touches
 # src/main; the end-of-round snapshot must never be the first compile.
 set -euo pipefail
@@ -42,10 +44,14 @@ else
   # oracle entry and Verify filters to registered names)
   QUERIES=$(grep -hoE '"q[0-9]+[a-z]?_[a-z0-9_]+"' $CHANGED 2>/dev/null \
     | tr -d '"' | sort -u | tr '\n' ' ') || true
-  if [[ -z "${QUERIES// /}" ]]; then
-    # core (non-query) change: re-verify the whole registry
-    QUERIES=""
-  fi
+  for f in $CHANGED; do
+    if ! grep -qE 'Q\.(of|rowsOnly)\(' "$f" 2>/dev/null; then
+      # no query defined here: its dependents are unknown, so
+      # re-verify the whole registry
+      QUERIES=""
+      break
+    fi
+  done
   echo "== preflight: touched queries: ${QUERIES:-<all — core change>} =="
 fi
 
