@@ -54,13 +54,15 @@ object Fixpoint {
     loop(init, rounds, step, changed, probeAtCap = false)._1
 
   /** The shared change test for a state keyed on `key` whose key set
-    * never changes: one inner join on `key` and a limit-1 count of
-    * rows whose `value` moved.
+    * never changes: one inner join on `key` and a count of rows whose
+    * `value` moved. No `limit(1)`: Spark names a limit's row counter
+    * from a JVM-wide sequence, so every limit compiles a class whose
+    * source is new on each run and never comes from the codegen cache.
     */
   def changedOn(key: String, value: String): Changed = (next, prev) =>
     next.join(prev.select(col(key), col(value).as("graft_prev")), Seq(key))
       .filter(col(value) =!= col("graft_prev"))
-      .limit(1).count() > 0
+      .count() > 0
 
   private def loop(init: DataFrame, maxRounds: Int, step: Step, changed: Changed,
       probeAtCap: Boolean): (DataFrame, Int, Boolean) = {

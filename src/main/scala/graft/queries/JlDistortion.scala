@@ -32,7 +32,7 @@ import graft.functions.{det, vec}
   * join are fixed 64-row frames at ANY scale (the q255
   * bounded-BNLJ doctrine, whitelisted with that rationale) and the
   * C(64,2) = 2016 pair frame never grows; projections are one
-  * codegen'd pass (32 fused ±chains, no explode). Output ≤ ~12
+  * pass (32 dots against literal sign vectors, no explode). Output ≤ ~12
   * histogram rows. Zero-distance duplicate pairs are excluded on
   * both engines (d² > 0).
   */
@@ -96,9 +96,10 @@ object JlDistortion {
     * the three-dot-product identity, and the zero-distance guard.
     */
   def audit(e0: DataFrame): DataFrame = {
-    def proj(p: Int) = (1 to Dims)
-      .map(d => element_at(col("v"), d) * lit(sign(p, d)))
-      .reduce(_ + _)
+    // one sequential dot per plane — the same terms in the same order as
+    // a fused 64-term ±chain; 32 fused chains outgrew the JVM's 64 KB
+    // method limit, and a class that fails to compile is retried every run
+    def proj(p: Int) = vec.dot(col("v"), typedLit((1 to Dims).map(sign(p, _))))
     val e = graft.CacheScope.trackedCache(
       e0.select(col("vec_id"), col("v"),
         array((0 until Planes).map(proj): _*).as("yarr")))

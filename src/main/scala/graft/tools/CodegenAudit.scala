@@ -1,6 +1,12 @@
 package graft.tools
 
-import org.apache.spark.sql.DataFrame
+import java.lang.management.ManagementFactory
+
+import scala.jdk.CollectionConverters._
+import scala.util.control.NonFatal
+
+import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
@@ -12,8 +18,18 @@ import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
   * is a CodegenFallback (evaluated interpreted, never fused into a
   * WholeStageCodegen span). Prints one line per (query, plan-node,
   * expression-class) with a count, so hot filters/projections that
-  * silently fall back are visible. Usage:
-  *   runMain graft.tools.CodegenAudit <sfDir> [query ...]
+  * silently fall back are visible.
+  *
+  * `--reuse` instead runs two passes over the queries, each query
+  * written to Spark's `noop` sink, and prints per query the classes
+  * Janino compiled in each pass — `REUSE <query> <pass 1> <pass 2>` —
+  * then the totals, the number of queries that recompiled and the
+  * JVM's metaspace after each pass. Pass 2 re-runs plans the JVM has
+  * already compiled, so its count is what the generated-class cache
+  * (GraftSession.CodegenCacheEntries) failed to keep, plus any query
+  * whose generated source differs between runs on the same input.
+  * Usage:
+  *   runMain graft.tools.CodegenAudit [--reuse] <sfDir> [query ...]
   */
 object CodegenAudit {
 
@@ -34,11 +50,41 @@ object CodegenAudit {
   }
 
   def main(args: Array[String]): Unit = {
-    val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val names = if (args.length > 1) args.drop(1).toSeq
+    val (flags, rest) = args.partition(_ == "--reuse")
+    val sfDir = rest.headOption.getOrElse("/root/testdata/sf0.001")
+    val names = if (rest.length > 1) rest.drop(1).toSeq
       else graft.Registry.all.map(_.name)
     val spark = graft.GraftSession.local(8)
     spark.sparkContext.setLogLevel("ERROR")
+    if (flags.nonEmpty) reuse(spark, sfDir, names) else audit(spark, sfDir, names)
+    spark.stop()
+  }
+
+  private def reuse(spark: SparkSession, sfDir: String, names: Seq[String]): Unit = {
+    def compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    def metaspaceMb = ManagementFactory.getMemoryPoolMXBeans.asScala
+      .filter(_.getName == "Metaspace").map(_.getUsage.getUsed / 1e6).sum
+    def pass(): (Seq[Long], Double) = {
+      val counts = names.map { n =>
+        val before = compiles
+        try graft.Registry.byName(n).run(spark, sfDir)
+          .write.format("noop").mode("overwrite").save()
+        catch { case NonFatal(e) =>
+          println(s"REUSE $n ERROR ${e.getClass.getSimpleName}")
+        }
+        spark.catalog.clearCache()
+        compiles - before
+      }
+      (counts, metaspaceMb)
+    }
+    val (first, meta1) = pass()
+    val (second, meta2) = pass()
+    names.indices.foreach(i => println(s"REUSE ${names(i)} ${first(i)} ${second(i)}"))
+    println(f"REUSE total ${first.sum} ${second.sum} recompiling=${second.count(_ > 0)}" +
+      f" metaspace_mb=$meta1%.0f,$meta2%.0f")
+  }
+
+  private def audit(spark: SparkSession, sfDir: String, names: Seq[String]): Unit =
     names.foreach { n =>
       try {
         val df: DataFrame = graft.Registry.byName(n).run(spark, sfDir)
@@ -58,11 +104,9 @@ object CodegenAudit {
         else hits.toSeq.sorted.foreach { case ((node, expr), c) =>
           println(s"AUDIT $n $node $expr x$c")
         }
-      } catch { case scala.util.control.NonFatal(e) =>
+      } catch { case NonFatal(e) =>
         println(s"AUDIT $n ERROR ${e.getClass.getSimpleName}")
       }
       spark.catalog.clearCache()
     }
-    spark.stop()
-  }
 }

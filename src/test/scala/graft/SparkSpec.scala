@@ -10,7 +10,9 @@ import org.scalatest.BeforeAndAfterAll
   * GraftSession so plan assertions test the real config.
   */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
-  lazy val spark: SparkSession = SparkSession.builder()
+  // codegen reuse: its cache size is static, so only the JVM's first
+  // session (this one) can set it
+  lazy val spark: SparkSession = GraftSession.codegenReuse(SparkSession.builder())
     .master("local[4]")
     .appName("graft-test")
     .config("spark.sql.shuffle.partitions", "4")
