@@ -64,15 +64,6 @@ object Bench {
       val parentXmx = jvmArgs.filter(_.startsWith("-Xmx"))
         .lastOption.map(_.stripPrefix("-Xmx"))
       val mem = sys.env.get("SPARK_DRIVER_MEM").orElse(parentXmx).getOrElse("8g")
-      val addOpens = Seq(
-        "java.base/java.lang", "java.base/java.lang.invoke",
-        "java.base/java.lang.reflect", "java.base/java.io",
-        "java.base/java.net", "java.base/java.nio",
-        "java.base/java.util", "java.base/java.util.concurrent",
-        "java.base/java.util.concurrent.atomic",
-        "java.base/sun.nio.ch", "java.base/sun.nio.cs",
-        "java.base/sun.security.action", "java.base/sun.util.calendar",
-      ).flatMap(p => Seq("--add-opens", s"$p=ALL-UNNAMED"))
       val cmd = Seq(javaBin) ++ addOpens ++ Seq(
         "-Dspark.ui.enabled=false", "-Dspark.sql.session.timeZone=UTC",
         s"-Xmx$mem", s"-Xms$mem", hugeMethodsFlag,
@@ -85,6 +76,17 @@ object Bench {
       System.err.println(s"[bench] re-exec with pinned flags failed ($e); running in-process")
       None
     }
+
+  /** `--add-opens` flags from the resource build.sbt also reads, so the
+    * re-exec'd JVM opens exactly the packages `sbt run` would. */
+  private def addOpens: Seq[String] = {
+    val in = getClass.getResourceAsStream("/graft/jdk-add-opens.txt")
+    require(in != null, "resource graft/jdk-add-opens.txt not on the classpath")
+    try scala.io.Source.fromInputStream(in, "UTF-8").getLines()
+      .map(_.trim).filter(l => l.nonEmpty && !l.startsWith("#"))
+      .flatMap(p => Seq("--add-opens", s"$p=ALL-UNNAMED")).toSeq
+    finally in.close()
+  }
 
   def main(args: Array[String]): Unit = {
     val startedPinned = flagsPinned(jvmArgs)

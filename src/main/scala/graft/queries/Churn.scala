@@ -1,5 +1,6 @@
 package graft.queries
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import graft.{Q, Tables}
 import graft.functions.det._
@@ -117,6 +118,12 @@ object Churn {
         |HAVING COUNT(*) >= 3
         |ORDER BY subscription_type, region, avg_risk_score DESC, engagement_segment""".stripMargin) { t =>
       val recent = col("o_orderdate") > recentStart.tsLit
+      // distinct counts as set sizes, each set bounded by its column's
+      // domain (months in the window, 5 priorities, 3 statuses): several
+      // countDistincts would become an Expand whose projection order
+      // follows attribute-id hashes, so the generated code — and Spark's
+      // class-cache key — would differ between runs of the same query
+      def nDistinct(c: Column): Column = size(collect_set(c)).cast("long")
       val met = t.orders
         .filter(col("o_orderdate") > histStart.tsLit &&
           col("o_orderdate") <= asOf.tsLit)
@@ -124,10 +131,10 @@ object Churn {
         .agg(
           count(when(recent, 1)).as("recent_orders"),
           count(when(col("o_orderdate") <= recentStart.tsLit, 1)).as("historical_orders"),
-          countDistinct(when(recent, date_format(col("o_orderdate"), "yyyy-MM")))
+          nDistinct(when(recent, date_format(col("o_orderdate"), "yyyy-MM")))
             .as("active_months_recent"),
-          countDistinct(col("o_orderpriority")).as("unique_priorities"),
-          countDistinct(col("o_orderstatus")).as("unique_statuses"),
+          nDistinct(col("o_orderpriority")).as("unique_priorities"),
+          nDistinct(col("o_orderstatus")).as("unique_statuses"),
           (dsum(col("o_totalprice")) / count(lit(1))).as("avg_spend"))
       val cust = t.customer
         .filter(col("c_acctbal") >= 0)

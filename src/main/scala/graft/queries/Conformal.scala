@@ -92,8 +92,13 @@ object Conformal {
         ((col("graft_sy") - col("slope") * col("graft_sx"))
           / col("n_train").cast("double")).as("intercept"))
       .collect()
-    val fits: Seq[(String, (Long, Double, Double))] = fitRows.map { r =>
-      r.getString(0) -> ((r.getLong(1), r.getDouble(2), r.getDouble(3)))
+    // slope/intercept are SQL NULL when the segment's fit is undefined
+    // (e.g. every train x is null): inject a null literal so that
+    // segment's residuals go null, as they did under the join spelling
+    def fitLit(r: org.apache.spark.sql.Row, i: Int): Column =
+      if (r.isNullAt(i)) lit(null).cast("double") else lit(r.getDouble(i))
+    val fits: Seq[(String, (Long, Column, Column))] = fitRows.map { r =>
+      r.getString(0) -> ((r.getLong(1), fitLit(r, 2), fitLit(r, 3)))
     }.toSeq.sortBy(_._1)
 
     def caseOver[T](entries: Seq[(String, T)])(v: T => Column): Column =
@@ -111,8 +116,8 @@ object Conformal {
           "slope DOUBLE, intercept DOUBLE, qhat DOUBLE, coverage DOUBLE"))
     if (fits.isEmpty) return emptyOut
 
-    val slopeCol = caseOver(fits)(f => lit(f._2))
-    val interceptCol = caseOver(fits)(f => lit(f._3))
+    val slopeCol = caseOver(fits)(_._2)
+    val interceptCol = caseOver(fits)(_._3)
     val fitSegs = fits.map(_._1)
 
     def withR(split: String) = base

@@ -117,16 +117,16 @@ object KmeansAudit {
       val d = element_at(col("qv"), i) - lit(cv(i - 1)); d * d
     }.reduce(_ + _)
 
-    // Round shape (settled by tools.KmeansAb interleaving the shapes
-    // in ONE warmed JVM, VERDICT r13 #1): each NON-final round
+    // Round shape (settled by interleaving the shapes in ONE warmed
+    // JVM, measured in OPTIMIZATION_r14.md): each NON-final round
     // materializes a SLIM (qv, k, dist) assignment cache — the
     // distance chains run once per row into the cache — then the
     // report rollup and the 64-dim centroid-update collect run as two
     // NARROW aggregates over the cached columns. The round-13 FUSED
     // single aggregate (66 agg expressions fed directly by the 8
     // distance chains) profiled faster in a cold JVM but benched
-    // consistently slower (5.7 → 6.5 s driver bench; KmeansAb
-    // interleaved min 3.6 vs 3.1 s) — one giant codegen'd
+    // consistently slower (5.7 → 6.5 s driver bench; interleaved
+    // min 3.6 vs 3.1 s) — one giant codegen'd
     // project+update path loses to cache + two narrow aggregates at
     // this width. The final round keeps NO cache: its only consumer
     // is the (n, inertia) rollup, so the fat qv column would be

@@ -99,4 +99,25 @@ class ConformalSpec extends SparkSpec {
     val out = run(rows)("s")
     assert(out._6 >= 0.85, s"coverage ${out._6}")
   }
+
+  test("q210 segment with no defined fit (every x null): null slope, null residuals") {
+    val good = (1L to 200L).map(i => Row("s", i, (i % 13).toDouble, 2.0 * (i % 13) + 3.0))
+    val nullX = (201L to 400L).map(i => Row("z", i, null, i.toDouble))
+    val out = Conformal.conformal(
+      spark.createDataFrame((good ++ nullX).asJava,
+        StructType.fromDDL("seg STRING, id BIGINT, x DOUBLE, y DOUBLE")),
+      col("seg"), col("id"), col("x"), col("y"))
+      .collect().map(r => r.getAs[String]("seg") -> r).toMap
+    assert(out.keySet === Set("s", "z"))
+    assert(math.abs(out("s").getAs[Double]("slope") - 2.0) < 1e-9)
+    assert(out("s").getAs[Double]("coverage") === 1.0)
+
+    val z = out("z")
+    val expect = (201L to 400L).groupBy(splitOf).view.mapValues(_.size.toLong).toMap
+    assert((z.getAs[Long]("n_train"), z.getAs[Long]("n_cal"), z.getAs[Long]("n_test")) ===
+      ((expect("train"), expect("cal"), expect("test"))))
+    Seq("slope", "intercept", "qhat").foreach(c => assert(z.isNullAt(z.fieldIndex(c)), c))
+    // r <= null is never true: no test point is counted as covered
+    assert(z.getAs[Double]("coverage") === 0.0)
+  }
 }
