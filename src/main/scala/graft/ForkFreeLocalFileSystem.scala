@@ -1,0 +1,44 @@
+package graft
+
+import java.nio.file.Files
+import java.nio.file.attribute.PosixFilePermission
+import java.util.EnumSet
+
+import org.apache.hadoop.fs.{LocalFileSystem, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.permission.FsPermission
+import org.apache.hadoop.io.nativeio.NativeIO
+
+/** Hadoop's checksummed local filesystem (`file:`), with permissions
+  * set in-process instead of by a forked `chmod`. Registered by
+  * [[GraftSession.forkFreeLocalFs]]; see there for why and what it
+  * keeps.
+  */
+final class ForkFreeLocalFileSystem
+    extends LocalFileSystem(new ForkFreeLocalFileSystem.Raw)
+
+object ForkFreeLocalFileSystem {
+
+  /** `RawLocalFileSystem` calls `setPermission` for every file it
+    * creates (the checksum layer's `.crc` siblings included) and every
+    * directory `mkdirs` makes. Without native Hadoop that call runs
+    * `chmod` in a child process; here the same nine mode bits go
+    * through `java.nio`. Native Hadoop and the sticky bit, which
+    * `java.nio` cannot set, keep Hadoop's own path.
+    */
+  final class Raw extends RawLocalFileSystem {
+    override def setPermission(p: Path, permission: FsPermission): Unit =
+      if (NativeIO.isAvailable || permission.getStickyBit) super.setPermission(p, permission)
+      else Files.setPosixFilePermissions(pathToFile(p).toPath, posix(permission.toShort))
+  }
+
+  /** The mode's rwx bits as `java.nio` permissions (0400 = owner read
+    * … 0001 = others execute, the enum's order).
+    */
+  private def posix(mode: Int): java.util.Set[PosixFilePermission] = {
+    val perms = EnumSet.noneOf(classOf[PosixFilePermission])
+    PosixFilePermission.values.zipWithIndex.foreach { case (p, i) =>
+      if ((mode & (0x100 >> i)) != 0) perms.add(p)
+    }
+    perms
+  }
+}

@@ -10,7 +10,9 @@ import org.apache.spark.sql.SparkSession
   * time zone for oracle parity. On a real cluster the same builder is
   * used with `master` unset and shuffle partitions derived from input
   * size (see Scaladoc on [[GraftSession.cluster]]). Generated code is
-  * compiled once per JVM and reused (see [[codegenReuse]]).
+  * compiled once per JVM and reused (see [[codegenReuse]]), and local
+  * files are written without forking a process per file (see
+  * [[forkFreeLocalFs]]).
   */
 object GraftSession {
 
@@ -55,9 +57,42 @@ object GraftSession {
     b.config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
       .config("spark.sql.codegen.useIdInClassName", "false")
 
+  /** Writes `file:` paths through [[ForkFreeLocalFileSystem]].
+    *
+    * Without the native Hadoop library (`NativeIO.isAvailable` is
+    * false in this build), Hadoop 3.4's `RawLocalFileSystem` sets
+    * permissions by forking `chmod`: once for every file it creates,
+    * once more for the file's `.crc` sibling (the checksum layer), and
+    * once for every directory `mkdirs` makes. Timed over 200 calls each
+    * in a standalone JVM (4-core VM), the stock `LocalFileSystem` took
+    * 7.1–7.9 ms per checksummed create + close, 3.3–3.5 ms per `mkdirs`
+    * and 6.4–7.6 ms per `setPermission`, against 0.03 ms for a plain
+    * `java.io` create; [[ForkFreeLocalFileSystem]] took 0.33–0.37,
+    * 0.06 and 0.04 ms. q254, which writes a partitioned store four
+    * times and compacts it, spent about a quarter of its time in those
+    * forks (traced benchmark pass: 2.12 s to build its frame, 1.56 s
+    * without them).
+    *
+    * The class sets the same mode bits through `java.nio`, so the same
+    * files, `.crc` checksums and permissions are written; only the
+    * forks go. With native Hadoop, or for a mode with the sticky bit,
+    * it falls back to Hadoop's own `setPermission`. Without this entry
+    * `file:` resolves to Hive's `ProxyLocalFileSystem`, which the Hive
+    * jars register and which wraps the stock `LocalFileSystem`.
+    *
+    * Like the codegen cache size, this holds JVM-wide only if the JVM's
+    * first `file:` FileSystem comes from a graft session's Hadoop conf:
+    * Hadoop caches one FileSystem per scheme and user, whatever conf
+    * later callers pass.
+    */
+  def forkFreeLocalFs(b: SparkSession.Builder): SparkSession.Builder =
+    b.config("spark.hadoop.fs.file.impl", classOf[ForkFreeLocalFileSystem].getName)
+
   def local(cores: Int = Runtime.getRuntime.availableProcessors()): SparkSession =
+    localBuilder(cores).getOrCreate()
+
+  private[graft] def localBuilder(cores: Int): SparkSession.Builder =
     base(SparkSession.builder().master(s"local[$cores]"), math.max(cores, 8))
-      .getOrCreate()
 
   /** Cluster form: shuffle partitions are a starting hint only — AQE
     * coalesces/splits at runtime from map-output sizes, which is the
@@ -67,7 +102,7 @@ object GraftSession {
     base(SparkSession.builder(), shufflePartitions).getOrCreate()
 
   private def base(b: SparkSession.Builder, shuffleParts: Int): SparkSession.Builder =
-    codegenReuse(b).appName("graft")
+    forkFreeLocalFs(codegenReuse(b)).appName("graft")
       .config("spark.sql.shuffle.partitions", shuffleParts.toString)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")

@@ -32,6 +32,15 @@ final case class MediaRow(doc_id: Long, format: String, payload: Array[Byte])
   * Encode runs per-partition with no shuffle (the same batched shape
   * as the decode paths); payload bytes exist only inside the task
   * that immediately decodes them.
+  *
+  * The patterned fixtures (q102, q110, q111) draw every payload, or
+  * every video frame, from a few dozen classes, so each task keeps a
+  * small array of the distinct encodings, filled on first use and
+  * dropped with the task ([[perTask]]): q111's 500 documents encode
+  * their 6,000 frames from 34 PNGs instead of 6,000. Payload bytes
+  * still exist only inside their task: nothing is shared across
+  * tasks, queries or runs, every row still carries its own payload
+  * bytes, and every decoder still decodes every payload.
   */
 object MediaFixture {
 
@@ -84,17 +93,37 @@ object MediaFixture {
     * (c+1) ≡ 0 mod 17 ⇒ black for every class), so the average-hash
     * threshold never degenerates.
     */
-  def synthesizePatterned(docs: DataFrame, idCol: String): DataFrame = {
+  def synthesizePatterned(docs: DataFrame, idCol: String): DataFrame =
+    perTask(docs, idCol, "png", PatternSlots, encodePatternSlot) { (id, pattern) =>
+      pattern(patternSlot((id % 17).toInt, id))
+    }
+
+  /** One row per id of `docs`, its payload built by `payload(id,
+    * encoded)`, where `encoded(slot)` is `encode(slot)` computed at most
+    * once per task for each of `slots` slots.
+    */
+  private def perTask(docs: DataFrame, idCol: String, format: String,
+      slots: Int, encode: Int => Array[Byte])(
+      payload: (Long, Int => Array[Byte]) => Array[Byte]): DataFrame = {
     val slim = docs.select(col(idCol).cast("long"))
     import slim.sparkSession.implicits._
-    slim.as[Long].mapPartitions(_.map(id =>
-      MediaRow(id, "png", encodePattern(id)))).toDF()
+    slim.as[Long].mapPartitions { ids =>
+      val memo = new Array[Array[Byte]](slots)
+      val encoded = (s: Int) => {
+        if (memo(s) == null) memo(s) = encode(s)
+        memo(s)
+      }
+      ids.map(id => MediaRow(id, format, payload(id, encoded)))
+    }.toDF()
   }
 
-  private def encodePattern(id: Long): Array[Byte] =
-    encodePatternK((id % 17).toInt, if (id % 2 == 0) 2 else 4)
+  // pattern class k ∈ 0..16 at scale 2 (even id) or 4 (odd id)
+  private val PatternSlots = 17 * 2
+  private def patternSlot(k: Int, id: Long): Int = k * 2 + (id % 2).toInt
+  private def encodePatternSlot(s: Int): Array[Byte] =
+    encodePatternK(s / 2, if (s % 2 == 0) 2 else 4)
 
-  private def encodePatternK(k: Int, scale: Int): Array[Byte] = {
+  private[graft] def encodePatternK(k: Int, scale: Int): Array[Byte] = {
     val dim = 8 * scale
     val img = new BufferedImage(dim, dim, BufferedImage.TYPE_INT_RGB)
     var y = 0
@@ -125,19 +154,11 @@ object MediaFixture {
     * `doc_id`, so the oracle re-derives each signature from
     * `documents` alone via the q102 white-cell-sum hash formula.
     */
-  def synthesizeVideoPatterned(docs: DataFrame, idCol: String): DataFrame = {
-    val slim = docs.select(col(idCol).cast("long"))
-    import slim.sparkSession.implicits._
-    slim.as[Long].mapPartitions(_.map(id =>
-      MediaRow(id, "grfv", encodeVideo(id)))).toDF()
-  }
-
-  private def encodeVideo(id: Long): Array[Byte] = {
-    val k = (id % 11).toInt
-    val scale = if (id % 2 == 0) 2 else 4
-    FrameContainer.encode(
-      (0 until 12).map(j => encodePatternK((k * 5 + j) % 17, scale)))
-  }
+  def synthesizeVideoPatterned(docs: DataFrame, idCol: String): DataFrame =
+    perTask(docs, idCol, "grfv", PatternSlots, encodePatternSlot) { (id, frame) =>
+      val k = (id % 11).toInt
+      FrameContainer.encode((0 until 12).map(j => frame(patternSlot((k * 5 + j) % 17, id))))
+    }
 
   /** Enveloped-audio synthesis for the audio-fingerprint gate (q110):
     * each doc renders an 8-segment amplitude ENVELOPE determined only
@@ -154,17 +175,16 @@ object MediaFixture {
     * are never equal (3 ≢ 0 mod 11 ⇒ consecutive levels differ), so
     * the fingerprint is well-defined and strictly gain-invariant.
     */
-  def synthesizeAudioPatterned(docs: DataFrame, idCol: String): DataFrame = {
-    val slim = docs.select(col(idCol).cast("long"))
-    import slim.sparkSession.implicits._
-    slim.as[Long].mapPartitions(_.map(id =>
-      MediaRow(id, "wav", encodeEnvelope(id)))).toDF()
-  }
+  def synthesizeAudioPatterned(docs: DataFrame, idCol: String): DataFrame =
+    perTask(docs, idCol, "wav", 13 * 3 * 2, encodeEnvelopeSlot) { (id, envelope) =>
+      envelope(((id % 13).toInt * 3 + (id % 3).toInt) * 2 + (id % 2).toInt)
+    }
 
-  private def encodeEnvelope(id: Long): Array[Byte] = {
-    val k = (id % 13).toInt
-    val gain = (1 + id % 3).toInt
-    val rate = (8000 * (1 + id % 2)).toInt
+  // slot ((k·3 + gain − 1)·2 + rate/8000 − 1), k ∈ 0..12
+  private def encodeEnvelopeSlot(s: Int): Array[Byte] =
+    encodeEnvelope(s / 6, 1 + s / 2 % 3, 8000 * (1 + s % 2))
+
+  private[graft] def encodeEnvelope(k: Int, gain: Int, rate: Int): Array[Byte] = {
     val framesPerSeg = rate / 50 // 0.02 s per segment, exact at both rates
     val data = new Array[Byte](8 * framesPerSeg * 2)
     var seg = 0

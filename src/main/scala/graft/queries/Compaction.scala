@@ -64,6 +64,11 @@ object Compaction {
     * uncommitted replay stays invisible. (The concurrent-reader
     * interleaving itself — reads racing the pointer swap — is pinned
     * in CommittedCompactionSpec; this gate proves the data algebra.)
+    *
+    * Every store write, the compaction and the result's `collect` run
+    * while the query's frame is being built, inside `Q.run`, so a
+    * traced run counts them as plan construction (`queries.build_s`,
+    * `queries.build_jobs`), not as the timed action's execution.
     */
   val q254 = Q.of(
     "q254_committed_compaction",

@@ -38,4 +38,18 @@ class CodegenReuseSpec extends SparkSpec {
       assert(compiles(n) === 0L)
     }
   }
+
+  // q110 once counted rates and gains with two countDistincts, whose
+  // Expand projection order follows the hashes of attribute ids, which
+  // are new on every run: whether a run recompiled depended on the ids
+  // it drew, so the runs here start from shifted ids
+  test("q110_audio_dedup: runs from shifted expression ids compile no new class") {
+    import org.apache.spark.sql.catalyst.expressions.NamedExpression
+    compiles("q110_audio_dedup")
+    val again = (1 to 12).map { shift =>
+      (1 to shift).foreach(_ => NamedExpression.newExprId)
+      compiles("q110_audio_dedup")
+    }
+    assert(again === Seq.fill(12)(0L))
+  }
 }

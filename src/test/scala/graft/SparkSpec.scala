@@ -10,9 +10,10 @@ import org.scalatest.BeforeAndAfterAll
   * GraftSession so plan assertions test the real config.
   */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
-  // codegen reuse: its cache size is static, so only the JVM's first
-  // session (this one) can set it
-  lazy val spark: SparkSession = GraftSession.codegenReuse(SparkSession.builder())
+  // codegen reuse and the fork-free `file:` filesystem hold JVM-wide
+  // only when set by the JVM's first session (this one)
+  lazy val spark: SparkSession = GraftSession.forkFreeLocalFs(
+    GraftSession.codegenReuse(SparkSession.builder()))
     .master("local[4]")
     .appName("graft-test")
     .config("spark.sql.shuffle.partitions", "4")
