@@ -88,6 +88,22 @@ object Bench {
     finally in.close()
   }
 
+  /** Seconds to build `q`'s frame on `sfDir` and count it, with
+    * `label` as the job description. Operator caches are dropped
+    * afterwards, failed or not: caches built by one query (slim
+    * signature/vector frames) must not linger into the next, where
+    * they evict under pressure and spew CacheManager warnings (VERDICT
+    * r2 #5), and a query timed with a predecessor's cache resident
+    * isn't measuring its own plan. Every timing here and in
+    * `tools.Inspect --time` goes through this.
+    */
+  def timeQuery(spark: SparkSession, q: Q, sfDir: String, label: String): Double = {
+    spark.sparkContext.setJobDescription(label)
+    val t0 = System.nanoTime()
+    try { q.run(spark, sfDir).count(); (System.nanoTime() - t0) / 1e9 }
+    finally spark.catalog.clearCache()
+  }
+
   def main(args: Array[String]): Unit = {
     val startedPinned = flagsPinned(jvmArgs)
     if (!startedPinned && !sys.env.contains("SPARK_GRAFT_BENCH_CHILD"))
@@ -108,34 +124,20 @@ object Bench {
     // page cache, and leaves the canary measuring what it is meant to
     // measure: external machine contention during the timed window.
     Registry.all.foreach { q =>
-      spark.sparkContext.setJobDescription(s"warmup:${q.name}")
       // NonFatal only: an OutOfMemoryError here would leave the JVM
       // degraded and silently skew every timed pass (ADVICE r6).
-      try q.run(spark, sfDir).count()
+      try timeQuery(spark, q, sfDir, s"warmup:${q.name}")
       catch { case scala.util.control.NonFatal(_) => () }
-      spark.catalog.clearCache()
     }
 
     val canaryName = "q01_agg_pushdown"
-    def canaryTime(): Double = {
-      spark.catalog.clearCache()
-      spark.sparkContext.setJobDescription("canary")
-      val t0 = System.nanoTime()
-      Registry.byName(canaryName).run(spark, sfDir).count()
-      (System.nanoTime() - t0) / 1e9
-    }
+    def canaryTime(): Double = timeQuery(spark, Registry.byName(canaryName), sfDir, "canary")
     val canaryStart = canaryTime()
 
     def esc(s: String): String = s.flatMap {
       case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"
       case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString
     }
-
-    // Caches built by one query (slim signature/vector frames) must not
-    // linger into the next: accumulated caches evict under pressure and
-    // spew CacheManager warnings (VERDICT r2 #5), and a query timed with
-    // a predecessor's cache resident isn't measuring its own plan.
-    spark.catalog.clearCache()
 
     // Two timed passes; a query's time is the MIN of its two passes.
     // Even on an idle host a single pass shows roving multi-second
@@ -148,16 +150,12 @@ object Bench {
     // scheduler. Errors are still reported per-query (value -1).
     def timedPass(): Seq[(String, Double, Option[String])] =
       Registry.all.map { q =>
-        spark.sparkContext.setJobDescription(q.name)
-        val t0 = System.nanoTime()
-        val err = try { q.run(spark, sfDir).count(); None }
+        try (q.name, timeQuery(spark, q, sfDir, q.name), None)
         catch { case e: Throwable =>
           System.err.println(s"[bench] ${q.name} FAILED: $e")
-          Some(s"${e.getClass.getSimpleName}: ${esc(String.valueOf(e.getMessage).take(200))}")
+          (q.name, -1.0,
+            Some(s"${e.getClass.getSimpleName}: ${esc(String.valueOf(e.getMessage).take(200))}"))
         }
-        val sec = (System.nanoTime() - t0) / 1e9
-        spark.catalog.clearCache()
-        (q.name, if (err.isEmpty) sec else -1.0, err)
       }
     val pass1 = timedPass()
     val pass2 = timedPass()

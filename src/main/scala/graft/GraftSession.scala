@@ -18,7 +18,7 @@ object GraftSession {
 
   /** Entries of Spark's generated-class cache
     * (`spark.sql.codegen.cache.maxEntries`, default 100), sized from a
-    * census of the registry: `CodegenAudit --reuse` (two passes over
+    * census of the registry: `tools.Inspect --reuse` (two passes over
     * all 276 queries, local mode, 4-core VM) counted 4,360 classes per
     * pass at sf0.001 and 4,375 at sf0.01 — one per generated source and
     * class loader, the driver's and the executors' — so this leaves
@@ -80,6 +80,14 @@ object GraftSession {
     * `file:` resolves to Hive's `ProxyLocalFileSystem`, which the Hive
     * jars register and which wraps the stock `LocalFileSystem`.
     *
+    * The second entry does the same for Hadoop's `FileContext` API,
+    * through which Structured Streaming writes its checkpoints and
+    * state: there `file:` is otherwise Hadoop's `LocalFs`, over its own
+    * stock `RawLocalFileSystem`. A checksummed create + close through
+    * `FileContext` took 6.4–8.5 ms with `LocalFs` and 1.2–1.6 ms with
+    * [[ForkFreeLocalFileSystem.Fs]] (100 calls per rep, warm reps of two
+    * standalone JVMs each, same VM).
+    *
     * Like the codegen cache size, this holds JVM-wide only if the JVM's
     * first `file:` FileSystem comes from a graft session's Hadoop conf:
     * Hadoop caches one FileSystem per scheme and user, whatever conf
@@ -87,6 +95,8 @@ object GraftSession {
     */
   def forkFreeLocalFs(b: SparkSession.Builder): SparkSession.Builder =
     b.config("spark.hadoop.fs.file.impl", classOf[ForkFreeLocalFileSystem].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
+        classOf[ForkFreeLocalFileSystem.Fs].getName)
 
   def local(cores: Int = Runtime.getRuntime.availableProcessors()): SparkSession =
     localBuilder(cores).getOrCreate()

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.Q
+import graft.functions.sketch.md5Word
 
 /** q272: ORACLE-CHECKED AMS F2 sign-sketch calibration — the
   * md5-replay doctrine's SECOND-MOMENT member (after q238/q251/q252/
@@ -79,7 +80,7 @@ object AmsF2 {
       .groupBy(col("source"), col("token"))
       .agg(count(lit(1)).as("c"))
       .withColumn("a",
-        expr("cast(conv(substring(md5(token), 1, 8), 16, 10) as bigint)"))
+        expr(md5Word("token")))
     val zCols: Seq[Column] = (0 until S).map { j =>
       sum(when(expr(s"(shiftright(a, $j) & 1) = 1"), col("c"))
         .otherwise(-col("c"))).as(s"z$j")

@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.Q
+import graft.functions.sketch.md5Word
 
 /** q117: hashed-feature LINEAR classifier scoring — the
   * fastText-shaped quality/filter model every curation pipeline runs
@@ -66,7 +67,7 @@ object Classifier {
           " i -> concat_ws(' ', slice(w, i + 1, 2))))"))
       .withColumn("raw", expr(
         "aggregate(fl, 0L, (acc, f) ->" +
-          " acc + CAST(conv(substring(md5(f), 1, 4), 16, 10) AS BIGINT) - 32768L)"))
+          s" acc + ${md5Word("f", len = 4)} - 32768L)"))
 
   /** The q117 body over any (doc_id, text) frame — factored so
     * SemanticSpec can pin hand-computed weights on tiny fixtures.

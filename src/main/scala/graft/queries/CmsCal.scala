@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.Q
+import graft.functions.sketch.md5Word
 
 /** q271: ORACLE-CHECKED count–min-sketch calibration — the md5-replay
   * recipe (q238 MinHash → q251 SimHash → q252 SRP → q258 Bloom →
@@ -86,9 +87,9 @@ object CmsCal {
       .agg(count(lit(1)).as("c"))
     val keyed = counts
       .withColumn("a",
-        expr("cast(conv(substring(md5(token), 1, 8), 16, 10) as bigint)"))
+        expr(md5Word("token")))
       .withColumn("s",
-        expr("cast(conv(substring(md5(token), 9, 8), 16, 10) as bigint) | 1"))
+        expr(s"${md5Word("token", 9)} | 1"))
     val js = array((0 until D).map(j => lit(j.toLong)): _*)
     val cells = keyed
       .select(explode(js).as("j"), col("a"), col("s"), col("c"))

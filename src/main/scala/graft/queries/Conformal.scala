@@ -69,8 +69,8 @@ object Conformal {
     // the fit aggregate and built a broadcast exchange inside BOTH the
     // cal and the test leg (fit was never cached), so each residual
     // pass paid an extra aggregate + broadcast build (guide §2.4 —
-    // remove exchanges outright; measured leg-by-leg in
-    // tools.PartsProf). The IEEE chains producing slope/intercept are
+    // remove exchanges outright; measured leg by leg in round 14,
+    // OPTIMIZATION_r14.md). The IEEE chains producing slope/intercept are
     // unchanged — the same doubles now arrive as literals, and q̂
     // stays an exact D18_6 decimal end to end, so every residual,
     // compare, and output value is bit-identical (oracle unchanged).

@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.Q
+import graft.functions.sketch.md5Word
 
 /** q266: DIFFERENTIALLY-PRIVATE COUNT RELEASE — the release mechanism
   * the privacy tier has been missing: q135/q174/q205 AUDIT
@@ -83,8 +84,7 @@ object DpRelease {
     val cells = docs.groupBy(col("source"), col("lang"))
       .agg(count(lit(1)).as("true_n"))
       .withColumn("graft_u32", expr(
-        s"cast(conv(substring(md5(concat(source, ':', lang, ':$Tag')), 1, 8)," +
-          s" 16, 10) as bigint)"))
+        md5Word(s"concat(source, ':', lang, ':$Tag')")))
     cells
       .withColumn("noise", expr(noiseSql("graft_u32")).cast("long"))
       .select(col("source"), col("lang"), col("true_n"), col("noise"),

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Q
+import graft.functions.sketch.md5Word
 import graft.functions.det.D18_6
 
 /** q129: DSIR-style IMPORTANCE WEIGHTS — data selection by importance
@@ -143,7 +144,7 @@ object Dsir {
       k: Int): DataFrame =
     importanceWeights(docs, isTarget)
       .withColumn("graft_g", expr(
-        "cast(-log(-log((cast(conv(substring(md5(concat('g:', cast(doc_id as string))), 1, 8), 16, 10) as bigint) + 0.5) / 4294967296.0)) as decimal(18,6))"))
+        s"cast(-log(-log((${md5Word("concat('g:', cast(doc_id as string))")} + 0.5) / 4294967296.0)) as decimal(18,6))"))
       .withColumn("graft_score",
         col("w").cast(D18_6) + col("graft_g") * 2)
       .orderBy(col("graft_score").desc, col("doc_id"))

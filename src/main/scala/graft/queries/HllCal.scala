@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.Q
+import graft.functions.sketch.md5Word
 
 /** q262: ORACLE-CHECKED HyperLogLog calibration — the md5-replay
   * recipe (q238 MinHash → q251 SimHash → q252 SRP → q258 Bloom)
@@ -89,8 +90,8 @@ object HllCal {
     */
   def report(docs: DataFrame): DataFrame = {
     val h = docs.select(col("source"),
-      expr("cast(conv(substring(md5(text), 1, 8), 16, 10) as bigint)").as("a"),
-      expr("cast(conv(substring(md5(text), 9, 8), 16, 10) as bigint)").as("w"))
+      expr(md5Word("text")).as("a"),
+      expr(md5Word("text", 9)).as("w"))
       .distinct()
     val regs = h
       .select(col("source"), (col("a") % M).as("bucket"),

@@ -72,8 +72,10 @@ import graft.functions.det._
   * per-(content, user) attribution, per-content roll-up, per-day
   * break-even cumsum + crossing, and the actor bridge distinct —
   * reuses without reshuffling (subset clustering). The per-content
-  * frame and the roi frame are cached; patterns/profile/actor frames
-  * are cell-sized and broadcast back onto them.
+  * frame and the roi frame are cached; the crossing day is a
+  * conditional min over the per-content ⋈ per-day join, not a second
+  * per-content frame joined back. Patterns/profile/actor frames are
+  * cell-sized and broadcast back onto them.
   */
 object Roi {
 
@@ -287,17 +289,21 @@ object Roi {
         .withColumn("engagement_revenue", col("total_watch_minutes") * 0.01)
         .drop("p_partkey", "premium_value"))
 
-      val be = fin.select(col("content_id"),
-        col("estimated_annual_revenue"), col("total_cost"))
-        .join(pcum, Seq("content_id"))
-        .filter(col("cum_minutes") * 0.01 + col("estimated_annual_revenue") >= col("total_cost"))
-        .groupBy(col("content_id"))
-        .agg(min(col("d")).as("be_day"))
+      // be + roi's LEFT JOIN in one step: the per-day frame joins the
+      // per-content frame once and folds back to one row per content
+      // (every fin column is a function of content_id, and none is
+      // -0.0 or NaN, so grouping on them passes them through).
+      // Joining a separate be aggregate back onto the cached fin frame
+      // costs two per-content shuffles under AQE: a cached frame
+      // reports no clustering until it is built.
+      val crossed = col("cum_minutes") * 0.01 + col("estimated_annual_revenue") >= col("total_cost")
+      val finBe = fin.join(pcum, Seq("content_id"), "left")
+        .groupBy(fin.columns.toIndexedSeq.map(col): _*)
+        .agg(min(when(crossed, col("d"))).as("be_day"))
 
       val netProfit = col("estimated_annual_revenue") + col("engagement_revenue") - col("total_cost")
       val roiPct = netProfit / col("total_cost") * 100
-      val roi = graft.CacheScope.trackedCache(fin
-        .join(be, Seq("content_id"), "left")
+      val roi = graft.CacheScope.trackedCache(finBe
         .withColumn("net_profit", netProfit)
         .withColumn("roi_percentage", roiPct)
         .withColumn("success_category",

@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.Q
+import graft.functions.sketch.md5Word
 import graft.functions.det
 
 /** q251: ORACLE-CHECKED SimHash calibration — the full
@@ -152,8 +153,8 @@ object SimhashCal {
         array_distinct(split(col("text"), " ")).as("tl")))
     val ab = base.select(col("doc_id"), explode(col("tl")).as("t"))
       .select(col("doc_id"),
-        expr("cast(conv(substring(md5(t), 1, 8), 16, 10) as bigint)").as("a"),
-        expr("cast(conv(substring(md5(t), 9, 8), 16, 10) as bigint)").as("b"))
+        expr(md5Word("t")).as("a"),
+        expr(md5Word("t", 9)).as("b"))
     // 64 plain conditional aggregates — codegen'd, map-side combined
     // (the q238 lesson: no higher-order-function lambdas in the hot
     // aggregate)

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.Q
+import graft.functions.sketch.md5Word
 import graft.functions.det
 
 /** q240: STRATIFIED ATE — the observational member of the
@@ -111,7 +112,7 @@ object StratifiedAte {
   def ate(customer: DataFrame, orders: DataFrame, thr: Column): DataFrame = {
     val cust = customer.select(
       col("c_custkey"), col("c_mktsegment").as("seg"),
-      when(expr("cast(conv(substring(md5(cast(c_custkey as string)), 1, 8), 16, 10) as bigint)")
+      when(expr(md5Word("cast(c_custkey as string)"))
         < thr, 1L).otherwise(0L).as("treated"))
     val y = cust
       .join(orders, col("o_custkey") === col("c_custkey"))

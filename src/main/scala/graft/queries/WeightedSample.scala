@@ -4,6 +4,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Q
+import graft.functions.sketch.md5Word
 
 /** q226: WEIGHTED SAMPLING WITHOUT REPLACEMENT per source —
   * Efraimidis–Spirakis A-ES (2006, public), the deterministic
@@ -49,7 +50,7 @@ object WeightedSample {
       |SELECT source, doc_id, n_chars, rnk
       |FROM ranked WHERE rnk <= $K
       |ORDER BY source, rnk""".stripMargin) { t =>
-    val u = (expr("conv(substring(md5(text), 1, 8), 16, 10)").cast("long") + 1L)
+    val u = (expr(md5Word("text")) + 1L)
       .cast("double") / lit(4294967296.0)
     val keyed = t.documents.select(
       col("source"), col("doc_id"), col("n_chars"),

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Q
+import graft.functions.sketch.md5Word
 
 /** q263/q264: PASSAGE-LEVEL partial-duplicate detection via winnowing
   * document fingerprints (Schleimer, Wilkerson, Aiken, SIGMOD 2003 —
@@ -265,8 +266,7 @@ object Winnowing {
         (size(col("w")).cast("long") - (K - 1)).as("nh"),
         posexplode(expr(
           s"transform(sequence(0, size(w) - $K), i -> " +
-            s"cast(conv(substring(md5(concat_ws(' ', slice(w, i + 1, $K))), 1, 8)," +
-            s" 16, 10) as bigint))")))
+            md5Word(s"concat_ws(' ', slice(w, i + 1, $K))") + ")")))
       .select(col("doc_id"), col("nh"), col("pos").cast("long").as("pos"),
         col("col").as("h"))
     val gx = hashes.withColumn("g",

@@ -7,13 +7,16 @@ import java.nio.file.attribute.PosixFilePermissions
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, LocalFileSystem, Path}
+import org.apache.hadoop.fs.{CreateFlag, FileContext, FileSystem, LocalFileSystem, Path}
+import org.apache.hadoop.fs.Options.CreateOpts
+import org.apache.hadoop.fs.local.LocalFs
 import org.apache.hadoop.fs.permission.FsPermission
 
-/** `file:` paths are written through [[ForkFreeLocalFileSystem]], which
-  * sets permissions in-process instead of forking `chmod`; the files,
-  * `.crc` checksums and mode bits must be the ones Hadoop's stock
-  * `LocalFileSystem` writes.
+/** `file:` paths are written through [[ForkFreeLocalFileSystem]] (and,
+  * from Hadoop's `FileContext` API, its `Fs`), which sets permissions
+  * in-process instead of forking `chmod`; the files, `.crc` checksums
+  * and mode bits must be the ones Hadoop's stock `LocalFileSystem`
+  * (`LocalFs`) writes.
   */
 class LocalFsSpec extends SparkSpec {
 
@@ -31,6 +34,15 @@ class LocalFsSpec extends SparkSpec {
 
   private def modeOf(p: JPath): String =
     PosixFilePermissions.toString(Files.getPosixFilePermissions(p))
+
+  // part files carry a per-job UUID
+  private val uuid = "[0-9a-f]{8}(-[0-9a-f]{4}){3}-[0-9a-f]{12}".r
+
+  /** Every path under `dir`, relative and UUID-masked, with its mode. */
+  private def tree(dir: JPath): Map[String, String] =
+    Files.walk(dir).iterator.asScala.filter(_ != dir).map { p =>
+      uuid.replaceAllIn(dir.relativize(p).toString, "UUID") -> modeOf(p)
+    }.toMap
 
   test("file: resolves to ForkFreeLocalFileSystem from GraftSession.local's and the test session's Hadoop conf") {
     val cls = classOf[ForkFreeLocalFileSystem]
@@ -64,12 +76,6 @@ class LocalFsSpec extends SparkSpec {
     import spark.implicits._
     val root = Files.createTempDirectory("graft_localfs_")
     val df = (0 until 60).map(i => (i, i % 3, s"v$i")).toDF("id", "p", "v").repartition(2)
-    // part files carry a per-job UUID
-    val uuid = "[0-9a-f]{8}(-[0-9a-f]{4}){3}-[0-9a-f]{12}".r
-    def tree(dir: JPath): Map[String, String] =
-      Files.walk(dir).iterator.asScala.filter(_ != dir).map { p =>
-        uuid.replaceAllIn(dir.relativize(p).toString, "UUID") -> modeOf(p)
-      }.toMap
     try {
       val forkFree = root.resolve("fork_free")
       df.write.partitionBy("p").parquet(forkFree.toString)
@@ -99,5 +105,31 @@ class LocalFsSpec extends SparkSpec {
       assert(perm.getStickyBit)
       assert(modeOf(dir) === "rwxrwxrwx")
     } finally FileSystem.get(fileUri, new Configuration()).delete(new Path(dir.toUri), true)
+  }
+
+  test("FileContext's file: resolves to ForkFreeLocalFileSystem.Fs and creates LocalFs's files, .crc siblings and modes") {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val forkFree = FileContext.getFileContext(fileUri, conf)
+    assert(forkFree.getDefaultFileSystem.getClass === classOf[ForkFreeLocalFileSystem.Fs])
+    val stockConf = new Configuration(conf)
+    stockConf.set("fs.AbstractFileSystem.file.impl", classOf[LocalFs].getName)
+    val stock = FileContext.getFileContext(fileUri, stockConf)
+    assert(stock.getDefaultFileSystem.getClass === classOf[LocalFs])
+    val root = Files.createTempDirectory("graft_localfs_")
+    // a checkpoint-style create: missing parents made on the way
+    def create(fc: FileContext, dir: String): JPath = {
+      val out = fc.create(new Path(root.resolve(s"$dir/offsets/0").toUri),
+        java.util.EnumSet.of(CreateFlag.CREATE), CreateOpts.createParent())
+      try out.write(Array.tabulate[Byte](3000)(i => (i * 7).toByte)) finally out.close()
+      root.resolve(dir)
+    }
+    try {
+      val got = tree(create(forkFree, "fork_free"))
+      val want = tree(create(stock, "stock"))
+      assert(got.keySet === Set("offsets", "offsets/0", "offsets/.0.crc"))
+      assert(got === want)
+      assert(Files.readAllBytes(root.resolve("fork_free/offsets/.0.crc")).toSeq ===
+        Files.readAllBytes(root.resolve("stock/offsets/.0.crc")).toSeq)
+    } finally FileSystem.get(fileUri, new Configuration()).delete(new Path(root.toUri), true)
   }
 }

@@ -71,21 +71,11 @@ class PlanHygieneSpec extends SparkSpec {
     // 64-row frames, C(64,2) pairs at any scale
     "q275_jl_distortion")
 
-  private def subtree(p: SparkPlan): Seq[SparkPlan] = {
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-    val kids = p match {
-      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
-      case s: QueryStageExec => Seq(s.plan)
-      case other => other.children
-    }
-    p +: kids.flatMap(subtree)
-  }
-
   /** One row by construction: a global aggregate (empty grouping) or a
     * literal local relation of at most a few rows.
     */
   private def provablyTiny(side: SparkPlan): Boolean =
-    subtree(side).exists {
+    Plans.nodes(side, throughCaches = false).exists {
       case h: HashAggregateExec if h.groupingExpressions.isEmpty => true
       case o: ObjectHashAggregateExec if o.groupingExpressions.isEmpty => true
       case s: SortAggregateExec if s.groupingExpressions.isEmpty => true

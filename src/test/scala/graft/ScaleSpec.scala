@@ -7,8 +7,9 @@ import graft.operators.{Dedup => D}
   * the dedup tier grow ~linearly with the corpus, demonstrated on the
   * 10× jump sf0.001 → sf0.1 (500 → 5000 docs).
   *
-  * What is and isn't linear (measured via graft.tools.ScaleCheck,
-  * r3): the banded shuffle is exactly linear (16 triples per doc);
+  * What is and isn't linear (measured in r3 with a one-off tool since
+  * folded into this spec, which computes and pins the same volumes):
+  * the banded shuffle is exactly linear (16 triples per doc);
   * the raw band-collision pair set has a quadratic component with a
   * tiny constant (7 → 58 candidates/doc here — random same-vocabulary
   * pairs colliding at p≈0.8%), which the signature-agreement

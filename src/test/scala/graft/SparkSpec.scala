@@ -1,29 +1,21 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 
 /** Shared local SparkSession for all specs (one JVM, getOrCreate
-  * dedupes across suites). Small shuffle-partition count keeps tiny
-  * test shuffles fast; the 100-TB-shaped configs (AQE etc.) match
-  * GraftSession so plan assertions test the real config.
+  * dedupes across suites). It is built by `GraftSession`'s own builder,
+  * so plan assertions test the config the queries run under; only the
+  * shuffle-partition count is lowered, to keep tiny test shuffles fast.
+  * Static confs (the codegen cache size, the `file:` filesystem) hold
+  * JVM-wide because this is the JVM's first session.
   */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
-  // codegen reuse and the fork-free `file:` filesystem hold JVM-wide
-  // only when set by the JVM's first session (this one)
-  lazy val spark: SparkSession = GraftSession.forkFreeLocalFs(
-    GraftSession.codegenReuse(SparkSession.builder()))
-    .master("local[4]")
-    .appName("graft-test")
+  lazy val spark: SparkSession = GraftSession.localBuilder(4)
     .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.adaptive.enabled", "true")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    // cap plan strings: nested InMemoryRelations print exponentially
-    // (see GraftSession) and AQE's explainString would OOM the test JVM
-    .config("spark.sql.maxPlanStringLength", (1 << 20).toString)
-    .config("spark.ui.enabled", "false")
     .getOrCreate()
 
   val sfDir = "/root/testdata/sf0.001"
@@ -39,16 +31,16 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   /** [[planOf]] plus the plan of every distinct cached
-    * (InMemoryRelation) intermediate the query scans, so pushed-filter
-    * and exchange assertions can see through a CacheScope
-    * materialization.
+    * (InMemoryRelation) intermediate the query scans, nested caches
+    * (a cache built over another) included, so pushed-filter and
+    * exchange assertions can see through a CacheScope materialization.
     */
   def planWithCachedOf(df: DataFrame): String = {
-    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
-    val seen = scala.collection.mutable.Set[Int]()
-    val cached = physicalNodes(df).collect {
-      case m: InMemoryTableScanExec if seen.add(System.identityHashCode(m.relation.cacheBuilder)) =>
-        m.relation.cachedPlan.toString()
+    val nodes = physicalNodesWithCached(df)
+    // the deep walk enters each cache once, at its first scan, whose
+    // cached plan is the very next node
+    val cached = nodes.zip(nodes.drop(1)).collect {
+      case (m: InMemoryTableScanExec, next) if next eq m.relation.cachedPlan => next.toString()
     }
     (planOf(df) +: cached).mkString("\n=== cached relation ===\n")
   }
@@ -56,24 +48,8 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   /** All physical nodes of the (possibly adaptive) plan, descending
     * through AQE wrappers — for structural shuffle/window assertions.
     */
-  def physicalNodes(df: DataFrame): Seq[org.apache.spark.sql.execution.SparkPlan] =
-    walkPlan(df.queryExecution.executedPlan)
-
-  private def walkPlan(
-      root: org.apache.spark.sql.execution.SparkPlan
-  ): Seq[org.apache.spark.sql.execution.SparkPlan] = {
-    import org.apache.spark.sql.execution.SparkPlan
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-    def walk(p: SparkPlan): Seq[SparkPlan] = {
-      val kids = p match {
-        case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
-        case s: QueryStageExec => Seq(s.plan)
-        case other => other.children
-      }
-      p +: kids.flatMap(walk)
-    }
-    walk(root)
-  }
+  def physicalNodes(df: DataFrame): Seq[SparkPlan] =
+    Plans.nodes(df.queryExecution.executedPlan, throughCaches = false)
 
   /** Runs `f` with a conf override, restoring the old value after. */
   def withConf[T](k: String, v: String)(f: => T): T = {
@@ -102,25 +78,13 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
 
   /** Like [[physicalNodes]] but also descends into cached
-    * (InMemoryRelation) plans — each cached relation walked ONCE even
-    * when several branches scan it — so a query that materializes an
-    * intermediate via CacheScope can still assert on the exchanges
-    * that feed the cache.
+    * (InMemoryRelation) plans, nested ones included — each cached
+    * relation walked ONCE even when several branches scan it — so a
+    * query that materializes an intermediate via CacheScope can still
+    * assert on the exchanges that feed the cache.
     */
-  def physicalNodesWithCached(df: DataFrame): Seq[org.apache.spark.sql.execution.SparkPlan] = {
-    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
-    val seen = scala.collection.mutable.Set[Int]()
-    // worklist so NESTED caches (a tracked cache built over another
-    // tracked cache, e.g. q67's scored frame over the per-content
-    // frame) are descended into as well, each distinct cache once
-    def expand(nodes: Seq[org.apache.spark.sql.execution.SparkPlan]): Seq[org.apache.spark.sql.execution.SparkPlan] =
-      nodes.flatMap {
-        case m: InMemoryTableScanExec if seen.add(System.identityHashCode(m.relation.cacheBuilder)) =>
-          m +: expand(walkPlan(m.relation.cachedPlan))
-        case other => Seq(other)
-      }
-    expand(physicalNodes(df))
-  }
+  def physicalNodesWithCached(df: DataFrame): Seq[SparkPlan] =
+    Plans.nodes(df.queryExecution.executedPlan, throughCaches = true)
 
   override def afterAll(): Unit = {
     // keep the session alive for other suites in the same JVM
