@@ -134,11 +134,6 @@ object Bench {
     def canaryTime(): Double = timeQuery(spark, Registry.byName(canaryName), sfDir, "canary")
     val canaryStart = canaryTime()
 
-    def esc(s: String): String = s.flatMap {
-      case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString
-    }
-
     // Two timed passes; a query's time is the MIN of its two passes.
     // Even on an idle host a single pass shows roving multi-second
     // contention/GC windows that inflate a contiguous BLOCK of queries
@@ -154,7 +149,7 @@ object Bench {
         catch { case e: Throwable =>
           System.err.println(s"[bench] ${q.name} FAILED: $e")
           (q.name, -1.0,
-            Some(s"${e.getClass.getSimpleName}: ${esc(String.valueOf(e.getMessage).take(200))}"))
+            Some(s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(200)}"))
         }
       }
     val pass1 = timedPass()
@@ -172,7 +167,7 @@ object Bench {
     // (BENCH_r06 lost 29 of 81 tail timings to truncation).
     def f3(d: Double): String = f"$d%.3f"
     val qs = results.map { case (n, s, _) => s""""$n":${f3(s)}""" }.mkString("{", ",", "}")
-    val errs = results.collect { case (n, _, Some(e)) => s""""$n":"$e"""" }
+    val errs = results.collect { case (n, _, Some(e)) => s""""$n":${Verify.jsonString(e)}""" }
       .mkString("{", ",", "}")
     val total = results.collect { case (_, s, None) => s }.sum
     val canary = s"""{"query":"$canaryName","start_sec":${f3(canaryStart)},""" +
@@ -188,7 +183,7 @@ object Bench {
     // defaultParallelism so every run's scaling denominator is part of
     // the artifact itself.
     val par = s""""cpus_requested":$cpus,""" +
-      s""""master":"${esc(spark.sparkContext.master)}",""" +
+      s""""master":${Verify.jsonString(spark.sparkContext.master)},""" +
       s""""default_parallelism":${spark.sparkContext.defaultParallelism}"""
     val json =
       s"""{"metric":"total","value":${f3(total)},"unit":"sec","queries":$qs,"errors":$errs,"canary":$canary,"canary_drift":${f3(drift)},"jvm":$jvm,$par,"sf":"$sfDir","epoch_ms":${System.currentTimeMillis()}}"""

@@ -336,13 +336,17 @@ object sketch {
   def hyperplaneBuckets(v: Column, tables: Int, bitsPerTable: Int): Column =
     Bridge.column(HyperplaneBuckets(Bridge.expression(v), tables, bitsPerTable))
 
-  /** SQL text of the bigint read from `len` hex digits of
-    * `md5(<sqlArg>)`, starting at digit `from` (1-based): with the
-    * default 8 digits, a 32-bit word uniform in [0, 2^32). Text rather
-    * than a Column so it can sit inside `expr(...)` strings and
+  /** SQL text of the bigint read from `len` hex digits of the hex
+    * string `sqlHex`, starting at digit `from` (1-based): 8 digits of
+    * an md5 are a 32-bit word uniform in [0, 2^32). Text rather than a
+    * Column so it can sit inside `expr(...)` strings and
     * higher-order-function lambda bodies. The DuckDB oracles spell the
     * same decode in their own dialect.
     */
+  def hexWord(sqlHex: String, from: Int, len: Int): String =
+    s"cast(conv(substring($sqlHex, $from, $len), 16, 10) as bigint)"
+
+  /** [[hexWord]] over `md5(<sqlArg>)`, by default its first 8 digits. */
   def md5Word(sqlArg: String, from: Int = 1, len: Int = 8): String =
-    s"cast(conv(substring(md5($sqlArg), $from, $len), 16, 10) as bigint)"
+    hexWord(s"md5($sqlArg)", from, len)
 }

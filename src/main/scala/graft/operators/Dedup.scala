@@ -41,13 +41,11 @@ object Dedup {
       .drop("graft_rn")
   }
 
-  /** Adds `shingles`: the distinct character n-gram set of `textCol`.
-    * O(n_chars) per row, no shuffle.
+  /** Adds `shingles`: the distinct character n-gram set of `textCol`
+    * ([[Shingles.charGrams]]).
     */
   def withShingles(df: DataFrame, textCol: String, n: Int): DataFrame =
-    df.withColumn("shingles", expr(
-      s"array_distinct(transform(sequence(1, greatest(length($textCol)-${n - 1}, 1), 1)," +
-        s" i -> substr($textCol, i, $n)))"))
+    df.withColumn("shingles", expr(Shingles.charGrams(textCol, n)))
 
   /** Adds `minhash`: `numHashes` min-values of two-level seeded hashes
     * over the shingle set, via the native

@@ -209,14 +209,7 @@ object Multimodal {
     */
   def decodePpmBatched(df: DataFrame, idCol: String): Dataset[DecodedImage] =
     payloadBatched(df, idCol)(() => ()) { (_, id, payload) =>
-      PpmCodec.decode(payload) match {
-        case Some(img) =>
-          val (r, g, b) = PpmCodec.channelMeans(img)
-          DecodedImage(id, ok = true, img.width.toLong, img.height.toLong,
-            r, g, b, byteLen(payload))
-        case None =>
-          DecodedImage(id, ok = false, 0L, 0L, 0.0, 0.0, 0.0, byteLen(payload))
-      }
+      rasterRow(id, payload, PpmCodec.decode(payload))
     }
 
   /** REAL batched audio decode for ANY JDK-supported container —
@@ -242,8 +235,8 @@ object Multimodal {
       rasterRow(id, payload, JpegCodec.decode(payload))
     }
 
-  /** The shared raster row contract ([[PngCodec.Png]] — JPEG decodes
-    * into the same type): header dims + channel means, gray (+alpha)
+  /** The shared raster row contract ([[PngCodec.Png]] — JPEG and PPM
+    * decode into the same type): header dims + channel means, gray (+alpha)
     * fanned out to (r, g, b); `ok = false` carry-through otherwise.
     */
   private def rasterRow(id: Long, payload: Array[Byte],
@@ -467,23 +460,9 @@ object Multimodal {
     * [[decodePpmBatched]].
     */
   def resizePpmBatched(df: DataFrame, idCol: String,
-      outW: Int, outH: Int): Dataset[ResizedImage] = {
-    require(outW > 0 && outH > 0)
-    // [[PpmCodec.Ppm]] is its own raster type, so this rides the shared
-    // payload scaffold rather than [[resizeRasterBatched]]; same
-    // non-throwing pixel-buffer gate as the PNG twin (PPM is always 3
-    // channels, but a hostile target must still reject per-row)
-    payloadBatched(df, idCol)(md5Hex _) { (hex, id, payload) =>
-      PpmCodec.decode(payload) match {
-        case Some(img) if outW.toLong * outH * 3 <= PngCodec.MaxPixelBytes =>
-          val out = PpmCodec.encode(PpmCodec.resizeNearest(img, outW, outH))
-          ResizedImage(id, ok = true, outW.toLong, outH.toLong,
-            byteLen(payload), out.length.toLong, hex(out))
-        case _ =>
-          ResizedImage(id, ok = false, 0L, 0L, byteLen(payload), 0L, null)
-      }
-    }
-  }
+      outW: Int, outH: Int): Dataset[ResizedImage] =
+    resizeRasterBatched(df, idCol, outW, outH)(
+      PpmCodec.decode, img => PpmCodec.encode(PngCodec.resizeNearest(img, outW, outH)))
 
   /** STUB resize + frame-sample over raw payload bytes, batch-shaped
     * (SURVEY §2 q61): the mapPartitions analog of the `mapInPandas`
@@ -515,19 +494,9 @@ object Multimodal {
         val payload = if (payload0 == null) Array.emptyByteArray else payload0
         val resized = Array.tabulate((payload.length + factor - 1) / factor)(j =>
           payload(j * factor))
-        val len = resized.length
-        val limit = math.max(len - 15, 1)
-        var i = 1
-        var n = 0L
-        var first: String = null
-        while (i <= limit && n < maxFrames) {
-          val frame = hex(java.util.Arrays.copyOfRange(resized, i - 1, math.min(i + 15, len)))
-          if (first == null) first = frame
-          n += 1
-          i += frameStride
-        }
+        val (n, first) = stubFrames(hex, resized, frameStride, maxFrames)
         ResizedMedia(id, format, math.max(w / factor, 1L), math.max(h / factor, 1L),
-          byteLen(payload), len.toLong, hex(resized), n, first)
+          byteLen(payload), resized.length.toLong, hex(resized), n, first)
       }
     }
   }
@@ -539,7 +508,7 @@ object Multimodal {
     * once per task, not per row, and rows stream through without
     * materializing the partition. Preserves the input partitioning —
     * no shuffle. Same stub semantics as [[decodeStub]] (byte-strided
-    * fake frames; swap the loop body for a real codec on a cluster
+    * fake frames; swap [[stubFrames]] for a real codec on a cluster
     * that has one) — MultimodalSpec pins batched ≡ column-pipeline.
     */
   def decodeBatchedStub(df: DataFrame, idCol: String): Dataset[MediaFeatures] = {
@@ -551,19 +520,22 @@ object Multimodal {
         // NULL -> empty payload, same task-survival rule as the
         // resize stub above
         val payload = if (payload0 == null) Array.emptyByteArray else payload0
-        val len = payload.length
-        val limit = math.max(len - 15, 1)
-        var i = 1
-        var n = 0L
-        var first: String = null
-        while (i <= limit) {
-          val frame = hex(java.util.Arrays.copyOfRange(payload, i - 1, math.min(i + 15, len)))
-          if (first == null) first = frame
-          n += 1
-          i += 64
-        }
-        MediaFeatures(id, len.toLong, hex(payload), n, first)
+        val (n, first) = stubFrames(hex, payload, 64, Long.MaxValue)
+        MediaFeatures(id, payload.length.toLong, hex(payload), n, first)
       }
     }
+  }
+
+  /** The stub's frame sampling, as [[decodeStub]] spells it in SQL:
+    * one frame per 16-byte window starting every `stride` bytes
+    * (1-based starts up to max(len − 15, 1), so a short payload is one
+    * short frame), at most `maxFrames`. Returns (frame count, md5 of
+    * the first frame): the only frame digest either stage emits.
+    */
+  private def stubFrames(hex: Array[Byte] => String, bytes: Array[Byte],
+      stride: Int, maxFrames: Long): (Long, String) = {
+    val len = bytes.length
+    val n = math.min(maxFrames, (math.max(len - 15, 1) - 1) / stride + 1L)
+    (n, hex(java.util.Arrays.copyOfRange(bytes, 0, math.min(16, len))))
   }
 }

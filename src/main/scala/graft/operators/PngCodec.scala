@@ -227,8 +227,10 @@ object PngCodec {
     out.toByteArray
   }
 
-  /** Nearest-neighbor resample — the same index mapping as
-    * [[PpmCodec.resizeNearest]], generalized over channel count.
+  /** Nearest-neighbor resample — the standard index mapping
+    * `src = ⌊dst · srcDim / dstDim⌋` per axis, all channels of a pixel
+    * copied together. Exact and allocation-bounded; every raster
+    * format's resize stage runs it.
     */
   def resizeNearest(img: Png, outW: Int, outH: Int): Png = {
     require(outW > 0 && outH > 0, "target dims must be positive")

@@ -12,12 +12,11 @@ package graft.operators
   * no image libraries, but P6 needs none. Decode is total — malformed
   * or non-PPM bytes return None instead of throwing, because a decode
   * stage that dies on one corrupt payload out of billions is unusable
-  * at scale.
+  * at scale. A decoded image is the shared raster type
+  * ([[PngCodec.Png]] with 3 channels, as [[JpegCodec]] decodes into),
+  * so resampling and channel means are [[PngCodec]]'s.
   */
 object PpmCodec {
-
-  /** A decoded P6 image: packed RGB, row-major, 3 bytes per pixel. */
-  final case class Ppm(width: Int, height: Int, rgb: Array[Byte])
 
   private def isWs(b: Byte): Boolean =
     b == ' ' || b == '\n' || b == '\r' || b == '\t' || b == '\f' || b == 0x0b
@@ -44,7 +43,7 @@ object PpmCodec {
   /** Total decode: None for anything that is not a well-formed
     * 8-bit-per-channel P6 with a complete pixel payload.
     */
-  def decode(bytes: Array[Byte]): Option[Ppm] = {
+  def decode(bytes: Array[Byte]): Option[PngCodec.Png] = {
     if (bytes == null || bytes.length < 2 || bytes(0) != 'P' || bytes(1) != '6') return None
     for {
       (w, p1) <- token(bytes, 2)
@@ -59,56 +58,17 @@ object PpmCodec {
       start = p3 + 1
       need = width.toLong * height * 3
       if start + need <= bytes.length
-    } yield Ppm(width, height,
+    } yield PngCodec.Png(width, height, 3,
       java.util.Arrays.copyOfRange(bytes, start, start + need.toInt))
   }
 
-  /** Minimal canonical encode: `P6\n<w> <h>\n255\n` + raster. */
-  def encode(img: Ppm): Array[Byte] = {
+  /** Minimal canonical encode of an RGB raster: `P6\n<w> <h>\n255\n` + pixels. */
+  def encode(img: PngCodec.Png): Array[Byte] = {
+    require(img.channels == 3, s"PPM (P6) is RGB; got ${img.channels} channels")
     val header = s"P6\n${img.width} ${img.height}\n255\n".getBytes("US-ASCII")
-    val out = new Array[Byte](header.length + img.rgb.length)
+    val out = new Array[Byte](header.length + img.pixels.length)
     System.arraycopy(header, 0, out, 0, header.length)
-    System.arraycopy(img.rgb, 0, out, header.length, img.rgb.length)
+    System.arraycopy(img.pixels, 0, out, header.length, img.pixels.length)
     out
-  }
-
-  /** Nearest-neighbor resample — the standard index mapping
-    * `src = ⌊dst · srcDim / dstDim⌋` per axis, channels copied
-    * together. Exact, allocation-bounded, and cheap enough to run
-    * per-row in a decode batch.
-    */
-  def resizeNearest(img: Ppm, outW: Int, outH: Int): Ppm = {
-    require(outW > 0 && outH > 0, "target dims must be positive")
-    require(outW.toLong * outH * 3 <= PngCodec.MaxPixelBytes,
-      s"target exceeds the ${PngCodec.MaxPixelBytes >> 20} MiB pixel-buffer gate")
-    val dst = new Array[Byte](outW * outH * 3)
-    var y = 0
-    while (y < outH) {
-      val sy = (y.toLong * img.height / outH).toInt
-      var x = 0
-      while (x < outW) {
-        val sx = (x.toLong * img.width / outW).toInt
-        val s = (sy * img.width + sx) * 3
-        val d = (y * outW + x) * 3
-        dst(d) = img.rgb(s); dst(d + 1) = img.rgb(s + 1); dst(d + 2) = img.rgb(s + 2)
-        x += 1
-      }
-      y += 1
-    }
-    Ppm(outW, outH, dst)
-  }
-
-  /** Per-channel means — the cheap global feature a curation pipeline
-    * filters on (all-black/all-white detection, channel imbalance).
-    */
-  def channelMeans(img: Ppm): (Double, Double, Double) = {
-    var r = 0L; var g = 0L; var b = 0L
-    var i = 0
-    while (i < img.rgb.length) {
-      r += img.rgb(i) & 0xff; g += img.rgb(i + 1) & 0xff; b += img.rgb(i + 2) & 0xff
-      i += 3
-    }
-    val n = (img.rgb.length / 3).toDouble
-    (r / n, g / n, b / n)
   }
 }

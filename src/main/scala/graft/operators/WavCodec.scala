@@ -81,7 +81,7 @@ object WavCodec {
   }
 
   /** Nearest-frame resample to `outRate` — the same index mapping as
-    * [[PpmCodec.resizeNearest]] on the time axis, channels kept
+    * [[PngCodec.resizeNearest]] on the time axis, channels kept
     * interleaved. (A production pipeline would band-limit first; for
     * feature extraction and plumbing the nearest-frame map is the
     * deterministic baseline.)

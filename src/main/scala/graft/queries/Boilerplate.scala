@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Q
+import graft.operators.Shingles
 
 /** q116: INTRA-corpus repeated-n-gram profile — the boilerplate /
   * template-text detector (the corpus-level twin of q85's
@@ -61,13 +62,7 @@ object Boilerplate {
     * verdict ladder.
     */
   private[graft] def profile(docs: DataFrame, k: Int): DataFrame = {
-    val shingled = docs
-      .select(col("doc_id"), split(col("text"), " ").as("w"))
-      .filter(size(col("w")) >= k)
-      .select(col("doc_id"), explode(expr(
-        s"array_distinct(transform(sequence(0, size(w) - $k)," +
-          s" i -> xxhash64(concat_ws(' ', slice(w, i + 1, $k)))))")).as("h"))
-    val withDf = shingled
+    val withDf = Shingles.docHashes(docs, k)
       .withColumn("dfreq", count(lit(1)).over(Window.partitionBy(col("h"))))
     withDf.groupBy(col("doc_id"))
       .agg(

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Q
 import graft.functions.sketch.md5Word
+import graft.operators.Shingles
 
 /** q117: hashed-feature LINEAR classifier scoring — the
   * fastText-shaped quality/filter model every curation pipeline runs
@@ -62,9 +63,7 @@ object Classifier {
     docs
       .withColumn("w", split(col("text"), " "))
       .filter(size(col("w")) >= 2)
-      .withColumn("fl", expr(
-        "array_distinct(transform(sequence(0, size(w) - 2)," +
-          " i -> concat_ws(' ', slice(w, i + 1, 2))))"))
+      .withColumn("fl", expr(Shingles.wordGrams(2, distinct = true)))
       .withColumn("raw", expr(
         "aggregate(fl, 0L, (acc, f) ->" +
           s" acc + ${md5Word("f", len = 4)} - 32768L)"))

@@ -1,8 +1,10 @@
 package graft.queries
 
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.{Q, Tables}
+import graft.Q
+import graft.operators.{Bloom, Shingles}
 
 /** q85: benchmark-contamination check — the decontamination pass every
   * pretraining pipeline runs before training: which corpus documents
@@ -53,23 +55,12 @@ object Contamination {
     overlapReport(t.documents, mod = 7, k = K).orderBy(col("doc_id"))
   }
 
-  /** (doc_id, h) — the per-doc DISTINCT k-gram shingle hashes, the
-    * shared front end of the exact (q85) and Bloom (q91) paths.
-    */
-  private def shingleHashes(docs: org.apache.spark.sql.DataFrame, k: Int): org.apache.spark.sql.DataFrame =
-    docs
-      .select(col("doc_id"), split(col("text"), " ").as("w"))
-      .filter(size(col("w")) >= k)
-      .select(col("doc_id"), explode(expr(
-        s"array_distinct(transform(sequence(0, size(w) - $k)," +
-          s" i -> xxhash64(concat_ws(' ', slice(w, i + 1, $k)))))")).as("h"))
-
   /** The q85 body over any (doc_id, text) frame — benchmark slice =
     * `doc_id % mod = 0`; factored so CurationSpec can plant a known
     * shared k-gram and assert it is the ONLY hit.
     */
-  def overlapReport(docs: org.apache.spark.sql.DataFrame, mod: Int, k: Int): org.apache.spark.sql.DataFrame = {
-    val shingled = shingleHashes(docs, k)
+  def overlapReport(docs: DataFrame, mod: Int, k: Int): DataFrame = {
+    val shingled = Shingles.docHashes(docs, k)
     val bench = shingled.filter(col("doc_id") % mod === 0)
       .select(col("doc_id").as("bench_id"), col("h"))
     val corp = shingled.filter(col("doc_id") % mod =!= 0)
@@ -87,65 +78,22 @@ object Contamination {
     * (`| 1`) keeps the probe stride and m coprime-ish so the k probes
     * don't collapse onto one bit when h2 ≡ 0 (mod m).
     */
-  private def h2(h: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
+  private[graft] def h2(h: Column): Column =
     xxhash64(h, lit(0x9e3779b97f4a7c15L)).bitwiseOR(lit(1L))
 
-  /** Bit positions a hash sets/probes: (h + i·h2(h)) mod m, i < k.
-    * Both terms are reduced mod m BEFORE combining so the arithmetic
-    * never overflows a long under ANSI mode (i·stride < 14·m ≪ 2⁶³);
-    * m is even (word-aligned) and the stride odd, so the stride can't
-    * collapse to 0 mod m.
+  /** Bit positions a hash sets/probes: (h + i·h2(h)) mod m, i < k,
+    * over the raw stride h2(h) as a column (q91 materializes it in its
+    * cached frame: inline, each of the k probes would re-hash it; the
+    * stride is m-independent, so it can live in the cache even though
+    * m is only known after the bench count). Both terms are reduced
+    * mod m BEFORE combining so the arithmetic never overflows a long
+    * under ANSI mode (i·stride < 14·m ≪ 2⁶³); m is even (word-aligned)
+    * and the stride odd, so the stride can't collapse to 0 mod m.
     */
-  private def positions(h: org.apache.spark.sql.Column, m: Long, k: Int) =
-    positionsFrom(h, h2(h), m, k)
-
-  /** Same ladder over a PRE-COMPUTED raw stride (h2(h) materialized
-    * into a cached frame — q91's probe path evaluates the k probes as
-    * inline expressions, so an inline h2 would be re-hashed once per
-    * probe; the stride is m-independent, so it can live in the cache
-    * even though m is only known after the bench count).
-    */
-  private def positionsFrom(h: org.apache.spark.sql.Column,
-      rawStride: org.apache.spark.sql.Column, m: Long, k: Int) = {
+  private[graft] def probes(h: Column, rawStride: Column, m: Long, k: Int): Seq[Column] = {
     val base = pmod(h, lit(m))
     val stride = pmod(rawStride, lit(m))
     (0 until k).map(i => pmod(base + lit(i.toLong) * stride, lit(m)))
-  }
-
-  /** Build the benchmark Bloom filter: distinct set-bit positions are
-    * computed DISTRIBUTED (explode → distinct), and only the positions
-    * come back to the driver — state is bounded by the BENCHMARK
-    * suite's size (a fixed eval set in production; ~n·k ints), the
-    * same budget class as the Lloyd/IVF driver state. Returns the bit
-    * words.
-    */
-  def buildBloom(benchHashes: org.apache.spark.sql.DataFrame, m: Long, k: Int): Array[Long] = {
-    val pos = benchHashes
-      .select(explode(array(positions(col("h"), m, k): _*)).as("p"))
-      .distinct().collect().map(_.getLong(0))
-    val words = new Array[Long](((m + 63) / 64).toInt)
-    pos.foreach(p => words((p >>> 6).toInt) |= 1L << (p & 63))
-    words
-  }
-
-  /** Membership test as a pure (codegen'd) column expression over the
-    * broadcast literal bit words — k static element_at probes, no join,
-    * no shuffle, no UDF.
-    */
-  def mightContain(words: Array[Long], m: Long, k: Int,
-      h: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    mightContainFrom(words, m, k, h, h2(h))
-
-  private def mightContainFrom(words: Array[Long], m: Long, k: Int,
-      h: org.apache.spark.sql.Column,
-      rawStride: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
-    val wordsLit = typedlit(words.toSeq)
-    positionsFrom(h, rawStride, m, k).map { p =>
-      call_function("shiftright",
-        element_at(wordsLit, shiftright(p, 6).cast("int") + 1),
-        (p % 64).cast("int"))
-        .bitwiseAND(lit(1L)) === lit(1L)
-    }.reduce(_ && _)
   }
 
   /** The q91 body: benchmark shingles → Bloom filter (≈19 bits/shingle,
@@ -155,7 +103,7 @@ object Contamination {
     * a superset of q85's exact answer; CurationSpec pins superset +
     * FP budget.
     */
-  def bloomReport(docs: org.apache.spark.sql.DataFrame, mod: Int, k: Int): org.apache.spark.sql.DataFrame = {
+  def bloomReport(docs: DataFrame, mod: Int, k: Int): DataFrame = {
     // one shingling pass feeds the bench count, the filter build, and
     // the probe scan (uncached this is 3 scans + 3 shingle recomputes;
     // caching took the sf0.1 bench run 2.8 s → the probe-pass cost)
@@ -165,21 +113,17 @@ object Contamination {
     // tier); m only arrives after the bench count, but the stride is
     // m-independent so it can ride the cached frame
     val shingled = graft.CacheScope.trackedCache(
-      shingleHashes(docs, k).withColumn("graft_s", h2(col("h"))))
+      Shingles.docHashes(docs, k).withColumn("graft_s", h2(col("h"))))
     val bench = shingled.filter(col("doc_id") % mod === 0)
       .select(col("h"), col("graft_s"))
     val nBench = math.max(1L, bench.select(col("h")).distinct().count())
     // ≈19.2 bits/element (per-shingle FP ≈ 1e-4 at k=13), word-aligned
     val m = math.max(640L, (nBench * 96L / 5L + 63L) / 64L * 64L)
     val kProbes = 13
-    val posCols = positionsFrom(col("h"), col("graft_s"), m, kProbes)
-    val setPos = bench
-      .select(explode(array(posCols: _*)).as("p"))
-      .distinct().collect().map(_.getLong(0))
-    val words = new Array[Long](((m + 63) / 64).toInt)
-    setPos.foreach(p => words((p >>> 6).toInt) |= 1L << (p & 63))
+    val ladder = probes(col("h"), col("graft_s"), m, kProbes)
+    val words = Bloom.words(bench, ladder, m)
     // DRIVER/LITERAL BOUND (VERDICT r13 #9): the filter words ride the
-    // plan as a literal array inside mightContainFrom, sized m ≈ 19.2
+    // plan as a literal array inside Bloom.contains, sized m ≈ 19.2
     // bits per BENCHMARK shingle — the benchmark suite is a fixed eval
     // set (≪ corpus; the thing q91 exists to screen against), so m is
     // bounded by the suite, not the 100 TB corpus. At the largest
@@ -191,7 +135,7 @@ object Contamination {
     // here is bench plumbing standing in for the external suite.
     shingled
       .filter(col("doc_id") % mod =!= 0)
-      .filter(mightContainFrom(words, m, kProbes, col("h"), col("graft_s")))
+      .filter(Bloom.contains(words, ladder))
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_flagged_shingles"))
   }

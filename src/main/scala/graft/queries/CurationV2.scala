@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Q
 import graft.functions.det
+import graft.operators.Shingles
 
 /** q250: CURATION PIPELINE v2 — the composed end-to-end pass over the
   * round's new gates, the q121/q38 composition pattern re-run with
@@ -17,12 +18,13 @@ import graft.functions.det
   * publishes (each doc counted once, at its first failure — the
   * attribution rule that makes the waterfall sum exactly to n_docs).
   *
-  * Every gate reuses its parent query's exact arithmetic verbatim
-  * (q227's D18_6-quantized c·log2 c fold; q233's position semi-join
-  * with min(8, gap) interval union; md5 identity), so the pipeline
-  * inherits their determinism proofs; the waterfall itself is pure
-  * integer conditional counting. An empty/whitespace doc has no
-  * entropy and fails gate 2 (stated, not dropped).
+  * Every gate reuses its parent query's exact arithmetic (q227's
+  * D18_6-quantized c·log2 c fold; q233's position semi-join with
+  * min(8, gap) interval union, the same [[graft.operators.Shingles]]
+  * calls; md5 identity), so the pipeline inherits their determinism
+  * proofs; the waterfall itself is pure integer conditional counting.
+  * An empty/whitespace doc has no entropy and fails gate 2 (stated,
+  * not dropped).
   *
   * Scale shape: gates 1–2 are scan-local projections; gate 3 is
   * q233's banded shape (the one exchange family); gate 4 one
@@ -123,26 +125,9 @@ object CurationV2 {
         (log2(col("n").cast("double"))
           - col("s").cast("double") / col("n").cast("double"))
           .cast(det.D18_6).as("bpc"))
-    // gate 3: q233's per-doc duplicated-gram interval union, verbatim
-    val grams = base
-      .filter(size(col("w")) >= K)
-      .select(col("doc_id"),
-        posexplode(expr(
-          s"transform(sequence(0, size(w) - $K)," +
-            s" i -> xxhash64(concat_ws(' ', slice(w, i + 1, $K))))")))
-      .select(col("doc_id"), col("pos").cast("long").as("pos"),
-        col("col").as("h"))
-    val dups = grams.select(col("doc_id"), col("h")).distinct()
-      .groupBy(col("h")).agg(count(lit(1)).as("graft_nd"))
-      .filter(col("graft_nd") >= 2).select(col("h"))
-    val nxt = lead(col("pos"), 1).over(
-      Window.partitionBy(col("doc_id")).orderBy(col("pos")))
-    val cov = grams.join(dups, Seq("h"), "left_semi")
-      .select(col("doc_id"), col("pos"), nxt.as("nxt"))
-      .groupBy(col("doc_id"))
-      .agg(sum(when(col("nxt").isNull, lit(K.toLong))
-        .otherwise(least(lit(K.toLong), col("nxt") - col("pos"))))
-        .cast("long").as("covered"))
+    // gate 3: q233's per-doc duplicated-gram interval union
+    val cov = Shingles.dupCoverage(Shingles.dupPositions(
+      Shingles.gramPositions(base, K, col("doc_id"))), K)
     // gate 4: exact-dup keep-first
     val ranked = base.select(col("doc_id"),
       row_number().over(

@@ -1,10 +1,10 @@
 package graft.queries
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Q
+import graft.operators.Shingles
 
 /** q233: DUPLICATED-NGRAM TOKEN COVERAGE per source — the ExactSubstr
   * statistic (Lee et al. "Deduplicating Training Data Makes Language
@@ -85,27 +85,8 @@ object DupCoverage {
   def coverage(docs: DataFrame): DataFrame = {
     val base = docs.select(col("doc_id"), col("source"),
       split(col("text"), " ").as("w"))
-    val grams = base
-      .filter(size(col("w")) >= K)
-      .select(col("doc_id"), col("source"),
-        posexplode(expr(
-          s"transform(sequence(0, size(w) - $K)," +
-            s" i -> xxhash64(concat_ws(' ', slice(w, i + 1, $K))))")))
-      .select(col("doc_id"), col("source"),
-        col("pos").cast("long").as("pos"), col("col").as("h"))
-    val dups = grams.select(col("doc_id"), col("h")).distinct()
-      .groupBy(col("h")).agg(count(lit(1)).as("graft_nd"))
-      .filter(col("graft_nd") >= 2)
-      .select(col("h"))
-    val dpos = grams.join(dups, Seq("h"), "left_semi")
-    val nxt = lead(col("pos"), 1).over(
-      Window.partitionBy(col("doc_id")).orderBy(col("pos")))
-    val cov = dpos
-      .select(col("doc_id"), col("source"), col("pos"), nxt.as("nxt"))
-      .groupBy(col("doc_id"))
-      .agg(sum(when(col("nxt").isNull, lit(K.toLong))
-        .otherwise(least(lit(K.toLong), col("nxt") - col("pos"))))
-        .cast("long").as("covered"))
+    val cov = Shingles.dupCoverage(Shingles.dupPositions(
+      Shingles.gramPositions(base, K, col("doc_id"))), K)
     val doc = base
       .select(col("doc_id"), col("source"), size(col("w")).cast("long").as("n_tok"))
       .join(cov, Seq("doc_id"), "left")

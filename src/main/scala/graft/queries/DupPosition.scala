@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.Q
+import graft.operators.Shingles
 
 /** q247: BOILERPLATE POSITION PROFILE per source — WHERE in the
   * document do cross-doc duplicated 8-gram spans start: front, middle
@@ -77,19 +78,9 @@ object DupPosition {
     // semi-join; uncached, each consumer re-runs the posexplode +
     // per-gram xxhash64 corpus pass (two fact passes, different shuffle
     // keys so no exchange is shared) — materialize once (guide §2.4)
-    val grams = graft.CacheScope.trackedCache(base
-      .filter(size(col("w")) >= K)
-      .select(col("doc_id"), col("source"), size(col("w")).cast("long").as("l"),
-        posexplode(expr(
-          s"transform(sequence(0, size(w) - $K)," +
-            s" i -> xxhash64(concat_ws(' ', slice(w, i + 1, $K))))")))
-      .select(col("doc_id"), col("source"), col("l"),
-        col("pos").cast("long").as("pos"), col("col").as("h")))
-    val dups = grams.select(col("doc_id"), col("h")).distinct()
-      .groupBy(col("h")).agg(count(lit(1)).as("graft_nd"))
-      .filter(col("graft_nd") >= 2)
-      .select(col("h"))
-    val dpos = grams.join(dups, Seq("h"), "left_semi")
+    val grams = graft.CacheScope.trackedCache(Shingles.gramPositions(base, K,
+      col("doc_id"), col("source"), size(col("w")).cast("long").as("l")))
+    val dpos = Shingles.dupPositions(grams)
       .select(col("source"), expr("pos * 3 div l").as("third"))
     val agg = dpos.groupBy(col("source")).agg(
       sum(when(col("third") === 0, 1L).otherwise(0L)).cast("long").as("front"),

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.functions._
 
 import graft.Q
+import graft.operators.Shingles
 
 /** q222/q223: EVAL-INTEGRITY audits — the two content-identity
   * diagnostics a training-data owner runs beside q85's external
@@ -125,9 +126,8 @@ object Leakage {
     val gs = t.documents
       .select(split(col("text"), " ").as("w"), col("source"))
       .filter(size(col("w")) >= 8)
-      .select(explode(expr(
-        "transform(sequence(0, size(w) - 8), i -> xxhash64(concat_ws(' ', slice(w, i + 1, 8))))"))
-        .as("g"), col("source"))
+      .select(explode(expr(Shingles.wordGrams(8, Shingles.Xxhash64))).as("g"),
+        col("source"))
       .distinct()
     val grams = gs.as("a").join(gs.as("b"),
         col("a.g") === col("b.g") && col("a.source") < col("b.source"))

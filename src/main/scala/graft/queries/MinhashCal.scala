@@ -5,6 +5,8 @@ import org.apache.spark.sql.functions._
 
 import graft.Q
 import graft.functions.det
+import graft.functions.sketch.hexWord
+import graft.operators.Shingles
 
 /** q238: ORACLE-CHECKED MinHash-LSH calibration — the full
   * minhash → band → candidate-pair pipeline built from md5-derived
@@ -111,9 +113,8 @@ object MinhashCal {
     val sh = docs
       .select(col("doc_id"), split(col("text"), " ").as("w"))
       .filter(size(col("w")) >= K)
-      .select(col("doc_id"), expr(
-        s"array_distinct(transform(sequence(0, size(w) - $K)," +
-          s" i -> md5(concat_ws(' ', slice(w, i + 1, $K)))))").as("shl"))
+      .select(col("doc_id"),
+        expr(Shingles.wordGrams(K, Shingles.Md5, distinct = true)).as("shl"))
     // Signature computation stays OUT of higher-order functions:
     // Spark HOF lambdas run interpreted (no whole-stage codegen), and
     // 32 perms x ~50 shingles x corpus made the in-row transform()
@@ -126,9 +127,8 @@ object MinhashCal {
     val shc = graft.CacheScope.trackedCache(sh)
     val ab = shc.select(col("doc_id"), explode(col("shl")).as("s"))
       .select(col("doc_id"),
-        expr("cast(conv(substring(s, 1, 8), 16, 10) as bigint)").as("a"),
-        expr("cast(conv(substring(s, 9, 8), 16, 10) as bigint) * 2 + 1")
-          .as("b"))
+        expr(hexWord("s", 1, 8)).as("a"),
+        expr(s"${hexWord("s", 9, 8)} * 2 + 1").as("b"))
     val minCols = (0 until Perms).map(j =>
       min((col("a") + lit(j.toLong) * col("b")) % lit(P)).as(s"s$j"))
     val sigAgg = ab.groupBy(col("doc_id"))

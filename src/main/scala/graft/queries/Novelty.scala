@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.Q
+import graft.operators.Shingles
 
 /** q186: CORPUS NOVELTY CURVE — per document (in doc_id ingest
   * order), how many of its distinct 5-gram shingles have NEVER been
@@ -38,12 +39,7 @@ object Novelty {
     * the within-doc repetition collapse, and the short-doc gate.
     */
   def curve(docs: DataFrame, k: Int = K): DataFrame = {
-    val shingles = docs
-      .select(col("doc_id"), split(col("text"), " ").as("w"))
-      .filter(size(col("w")) >= k)
-      .select(col("doc_id"), explode(expr(
-        s"array_distinct(transform(sequence(0, size(w) - $k)," +
-          s" i -> xxhash64(concat_ws(' ', slice(w, i + 1, $k)))))")).as("h"))
+    val shingles = Shingles.docHashes(docs, k)
     val first = shingles.groupBy(col("h"))
       .agg(min(col("doc_id")).as("graft_first"))
     shingles.join(first, "h")

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Q
+import graft.operators.Shingles
 
 /** q137: EXACT similarity join by PREFIX FILTERING — the
   * deterministic-guarantee exact algorithm (Chaudhuri et al.'s
@@ -55,12 +56,7 @@ object PrefixJoin {
   def pairs(docs: DataFrame, textCol: String, k: Int,
       tNum: Int, tDen: Int): DataFrame = {
     val t = tNum.toDouble / tDen
-    val sh = docs
-      .select(col("doc_id"), split(col(textCol), " ").as("w"))
-      .filter(size(col("w")) >= k)
-      .select(col("doc_id"), explode(expr(
-        s"array_distinct(transform(sequence(0, size(w) - $k)," +
-          s" i -> xxhash64(concat_ws(' ', slice(w, i + 1, $k)))))")).as("h"))
+    val sh = Shingles.docHashes(docs, k, textCol)
     val withDf = sh.withColumn("df", count(lit(1)).over(Window.partitionBy(col("h"))))
     // canonical per-doc order: rarest first, hash tiebreak
     val ranked = withDf

@@ -4,6 +4,7 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import graft.{Q, Tables}
 import graft.functions.TextProfile
+import graft.operators.Shingles
 
 /** Text-analysis queries over the documents table (SURVEY.md §2
   * q30–q34) — the language-data half of the engine: token counting,
@@ -173,8 +174,7 @@ object Text {
     t.documents
       .select(col("doc_id"),
         greatest(length(col("text")) - 2, lit(1)).cast("long").as("n_shingles"),
-        expr("size(array_distinct(transform(sequence(1, greatest(length(text)-2, 1), 1)," +
-          " i -> substr(text, i, 3))))").cast("long").as("n_distinct"))
+        size(expr(Shingles.charGrams("text", 3))).cast("long").as("n_distinct"))
       .withColumn("distinct_ratio",
         col("n_distinct").cast("double") / nullif(col("n_shingles"), lit(0L)))
       .orderBy(col("doc_id"))

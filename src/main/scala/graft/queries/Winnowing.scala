@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Q
 import graft.functions.sketch.md5Word
+import graft.operators.Shingles
 
 /** q263/q264: PASSAGE-LEVEL partial-duplicate detection via winnowing
   * document fingerprints (Schleimer, Wilkerson, Aiken, SIGMOD 2003 —
@@ -264,9 +265,7 @@ object Winnowing {
       .filter(size(col("w")) >= K + W - 1 && size(col("w")) < PosCap)
       .select(col("doc_id"),
         (size(col("w")).cast("long") - (K - 1)).as("nh"),
-        posexplode(expr(
-          s"transform(sequence(0, size(w) - $K), i -> " +
-            md5Word(s"concat_ws(' ', slice(w, i + 1, $K))") + ")")))
+        posexplode(expr(Shingles.wordGrams(K, md5Word(_)))))
       .select(col("doc_id"), col("nh"), col("pos").cast("long").as("pos"),
         col("col").as("h"))
     val gx = hashes.withColumn("g",
@@ -371,9 +370,8 @@ object Winnowing {
       .join(candIds, Seq("doc_id"), "left_semi")
       .select(col("doc_id"), split(col("text"), " ").as("w"))
       .filter(size(col("w")) >= K + W - 1 && size(col("w")) < PosCap)
-      .select(col("doc_id"), expr(
-        s"array_distinct(transform(sequence(0, size(w) - $K)," +
-          s" i -> md5(concat_ws(' ', slice(w, i + 1, $K)))))").as("gs")))
+      .select(col("doc_id"),
+        expr(Shingles.wordGrams(K, Shingles.Md5, distinct = true)).as("gs")))
     val scored = cand
       .join(gsets.select(col("doc_id").as("da"), col("gs").as("gsa")), Seq("da"))
       .join(gsets.select(col("doc_id").as("db"), col("gs").as("gsb")), Seq("db"))

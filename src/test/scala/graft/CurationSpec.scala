@@ -148,15 +148,19 @@ class CurationSpec extends SparkSpec {
 
   test("q91 Bloom membership expression agrees with the driver-side bits") {
     import spark.implicits._
+    import graft.operators.Bloom
     import graft.queries.Contamination
-    // tiny hand-built filter: insert 3 hashes, probe 6 (3 in, 3 out)
+    // tiny hand-built filter over q91's ladder and Bloom build/probe:
+    // insert 3 hashes, probe 6 (3 in, 3 out)
     val m = 640L
     val k = 5
     val in = Seq(11L, -42L, 1L << 60)
     val out = Seq(7L, -8L, 999999L)
-    val bits = Contamination.buildBloom(in.toDF("h"), m, k)
-    val r = (in ++ out).toDF("h")
-      .select(col("h"), Contamination.mightContain(bits, m, k, col("h")).as("hit"))
+    def keyed(hs: Seq[Long]) = hs.toDF("h").withColumn("graft_s", Contamination.h2(col("h")))
+    val ladder = Contamination.probes(col("h"), col("graft_s"), m, k)
+    val bits = Bloom.words(keyed(in), ladder, m)
+    val r = keyed(in ++ out)
+      .select(col("h"), Bloom.contains(bits, ladder).as("hit"))
       .collect().map(x => x.getLong(0) -> x.getBoolean(1)).toMap
     for (h <- in) assert(r(h), s"inserted hash $h not found (false negative)")
     // 640 bits for 3 elements: FP ~ (15/640)^5 ~ 1e-9 — misses mean a bug

@@ -155,4 +155,37 @@ class TextSpec extends SparkSpec {
     assert(sharing.toDouble / planted.length >= 0.5,
       s"only $sharing/${planted.length} planted pairs share a fingerprint")
   }
+
+  test("word k-grams match Scala's sliding(k): positional, distinct and hashed; short docs yield none") {
+    import spark.implicits._
+    import graft.operators.Shingles
+    val texts = Seq("a b c d e f g h i j", "x y x y x y x y", "to be or not to be", "solo", "p q")
+    val docs = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text")
+    val words = docs.select(col("doc_id"), split(col("text"), " ").as("w"))
+    for (k <- Seq(1, 2, 3, 8); distinct <- Seq(false, true)) {
+      val ref = texts.zipWithIndex.flatMap { case (t, i) =>
+        val ws = t.split(" ").toSeq
+        // sliding(k) yields the whole doc as one window when it is
+        // shorter than k; such a doc has no k-grams
+        val grams = if (ws.length < k) Nil else ws.sliding(k).map(_.mkString(" ")).toSeq
+        if (grams.isEmpty) None else Some(i.toLong -> (if (distinct) grams.distinct else grams))
+      }.toMap
+      val got = words.filter(size(col("w")) >= k)
+        .select(col("doc_id"), expr(Shingles.wordGrams(k, distinct = distinct)).as("g"))
+        .collect().map(r => r.getLong(0) -> r.getSeq[String](1)).toMap
+      assert(got == ref, s"k=$k distinct=$distinct")
+      if (distinct) {
+        val want = ref.toSeq.flatMap { case (d, gs) => gs.map(d -> _) }.toDF("doc_id", "g")
+          .select(col("doc_id"), xxhash64(col("g")).as("h"))
+        val hashes = Shingles.docHashes(docs, k)
+        assert(hashes.count() == want.count() && hashes.exceptAll(want).isEmpty,
+          s"docHashes k=$k")
+      } else {
+        val pos = Shingles.gramPositions(words, k, col("doc_id"))
+          .select(col("doc_id"), col("pos")).as[(Long, Long)].collect().toSet
+        assert(pos == ref.toSeq.flatMap { case (d, gs) => gs.indices.map(d -> _.toLong) }.toSet,
+          s"gramPositions k=$k")
+      }
+    }
+  }
 }
