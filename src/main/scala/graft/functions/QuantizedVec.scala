@@ -38,50 +38,11 @@ case class QuantizeI8(child: Expression) extends UnaryExpression {
       s"graft_quantize_i8 expects array<double>, got ${other.simpleString}")
   }
 
-  override def nullSafeEval(input: Any): Any = {
-    val v = input.asInstanceOf[ArrayData]
-    val n = v.numElements()
-    var maxAbs = 0.0
-    var i = 0
-    while (i < n) { val a = math.abs(v.getDouble(i)); if (a > maxAbs) maxAbs = a; i += 1 }
-    val out = new Array[Byte](n)
-    if (maxAbs > 0.0) {
-      val s = 127.0 / maxAbs
-      i = 0
-      while (i < n) {
-        out(i) = math.rint(v.getDouble(i) * s).toInt.max(-127).min(127).toByte
-        i += 1
-      }
-    }
-    new GenericArrayData(out)
-  }
+  override def nullSafeEval(input: Any): Any =
+    QuantizedVecImpl.quantize(input.asInstanceOf[ArrayData])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val maxAbs = ctx.freshName("maxAbs")
-      val s = ctx.freshName("s")
-      val out = ctx.freshName("out")
-      val q = ctx.freshName("q")
-      s"""
-         |int $n = $a.numElements();
-         |double $maxAbs = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  double v = java.lang.Math.abs($a.getDouble($i));
-         |  if (v > $maxAbs) $maxAbs = v;
-         |}
-         |byte[] $out = new byte[$n];
-         |if ($maxAbs > 0.0) {
-         |  double $s = 127.0 / $maxAbs;
-         |  for (int $i = 0; $i < $n; $i++) {
-         |    int $q = (int) java.lang.Math.rint($a.getDouble($i) * $s);
-         |    $out[$i] = (byte) java.lang.Math.max(-127, java.lang.Math.min(127, $q));
-         |  }
-         |}
-         |${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($out);
-       """.stripMargin
-    })
+    defineCodeGen(ctx, ev, a => s"graft.functions.QuantizedVecImpl.quantize($a)")
 
   override protected def withNewChildInternal(newChild: Expression): QuantizeI8 =
     copy(child = newChild)
@@ -108,9 +69,40 @@ case class CosineSimilarityI8(left: Expression, right: Expression)
         s"${left.dataType.simpleString}, ${right.dataType.simpleString}")
   }
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
+  override def nullSafeEval(a: Any, b: Any): Any =
+    QuantizedVecImpl.cosine(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.QuantizedVecImpl.cosine($a, $b)")
+
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): CosineSimilarityI8 =
+    copy(left = newLeft, right = newRight)
+}
+
+/** The kernels of [[QuantizeI8]] and [[CosineSimilarityI8]]: the
+  * interpreted path calls them directly, generated code calls them as
+  * static methods.
+  */
+object QuantizedVecImpl {
+  def quantize(v: ArrayData): ArrayData = {
+    val n = v.numElements()
+    var maxAbs = 0.0
+    var i = 0
+    while (i < n) { val a = math.abs(v.getDouble(i)); if (a > maxAbs) maxAbs = a; i += 1 }
+    val out = new Array[Byte](n)
+    if (maxAbs > 0.0) {
+      val s = 127.0 / maxAbs
+      i = 0
+      while (i < n) {
+        out(i) = math.rint(v.getDouble(i) * s).toInt.max(-127).min(127).toByte
+        i += 1
+      }
+    }
+    new GenericArrayData(out)
+  }
+
+  def cosine(x: ArrayData, y: ArrayData): Double = {
     val n = math.min(x.numElements(), y.numElements())
     var dot = 0L; var nx = 0L; var ny = 0L
     var i = 0
@@ -121,32 +113,6 @@ case class CosineSimilarityI8(left: Expression, right: Expression)
     }
     dot.toDouble / (math.sqrt(nx.toDouble) * math.sqrt(ny.toDouble))
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val dot = ctx.freshName("dot")
-      val nx = ctx.freshName("nx")
-      val ny = ctx.freshName("ny")
-      val xi = ctx.freshName("xi")
-      val yi = ctx.freshName("yi")
-      s"""
-         |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-         |long $dot = 0L, $nx = 0L, $ny = 0L;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  long $xi = $a.getByte($i);
-         |  long $yi = $b.getByte($i);
-         |  $dot += $xi * $yi; $nx += $xi * $xi; $ny += $yi * $yi;
-         |}
-         |${ev.value} = ((double) $dot)
-         |  / (java.lang.Math.sqrt((double) $nx) * java.lang.Math.sqrt((double) $ny));
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): CosineSimilarityI8 =
-    copy(left = newLeft, right = newRight)
 }
 
 /** Column-API entry points. */

@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DataTypes
 
 /** Product quantization (PQ) for embedding columns — the 8-byte-per-
   * vector compression tier below scalar int8 (q53's 64 B at dim 64):
@@ -20,7 +19,8 @@ import org.apache.spark.sql.types.DataTypes
   *   - training state on the driver is m·k·subDim doubles (8·16·8 =
   *     1 KiB here) — the bounded-driver-state class the IVF centroids
   *     already occupy; everything corpus-sized stays distributed;
-  *   - per-iteration means route through DECIMAL sums so codebooks are
+  *   - per-iteration means route through DECIMAL sums
+  *     ([[Similarity.cellMeans]]) so codebooks are
   *     bit-identical across runs/partitionings (double `avg` order
   *     drift would make every downstream spec flaky);
   *   - assignment/encode/LUT/score are pure per-row projections over
@@ -75,19 +75,13 @@ object ProductQuant {
       s"transform(sequence(0, ${m - 1}), mm -> slice($vCol, mm * $sd + 1, $sd))"))
       .as(Seq("mm", "sv")))
 
-    val dec = DataTypes.createDecimalType(30, 15)
     for (_ <- 1 to iters) {
       val assigned = subs.withColumn("cell",
         argminCell(col("sv"), element_at(cbLit(cb), col("mm") + 1), k))
-      val stats = assigned
-        .select(col("mm"), col("cell"), posexplode(col("sv")).as(Seq("pos", "x")))
-        .groupBy(col("mm"), col("cell"), col("pos"))
-        .agg((sum(col("x").cast(dec)) / count(lit(1))).cast("double").as("mx"))
-        .collect() // bounded: ≤ m·k·sd rows (the Lloyd driver-state class)
       val next = cb.map(_.map(_.clone()))
-      stats.foreach { r =>
-        next(r.getAs[Int]("mm"))(r.getAs[Int]("cell"))(r.getAs[Int]("pos")) =
-          r.getAs[Double]("mx")
+      // ≤ m·k·sd rows (the Lloyd driver-state class)
+      Similarity.cellMeans(assigned, Seq("mm", "cell"), "sv").foreach { r =>
+        next(r.getInt(0))(r.getInt(1))(r.getInt(2)) = r.getDouble(3)
       }
       cb = next
     }

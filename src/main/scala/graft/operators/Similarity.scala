@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DataTypes
 import graft.functions.{vec, NearestCentroid}
@@ -140,10 +140,8 @@ object Similarity {
     * driver, to be fed back as a literal local relation for the next
     * iteration. The corpus never leaves the executors; keeping the
     * centroid state lazy instead would nest one full corpus lineage
-    * per iteration into every downstream consumer. Dimension means go
-    * through fixed-scale decimal sums so the trained centroids are
-    * bit-deterministic regardless of partitioning (same rule as
-    * [[graft.functions.det]]).
+    * per iteration into every downstream consumer. Dimension means are
+    * [[cellMeans]], bit-deterministic regardless of partitioning.
     *
     * Why train at all: modulo-sampled seeds follow the DATA
     * distribution of single points, so on clustered real embeddings
@@ -157,22 +155,44 @@ object Similarity {
       iters: Int): DataFrame = {
     val spark = vectors.sparkSession
     import spark.implicits._
-    val dec = DataTypes.createDecimalType(30, 15)
     var cents = seeds.select(col(cidCol), col(cvCol))
     for (_ <- 1 to iters) {
       val assigned = assignToCentroids(vectors, cents, idCol, vCol, cidCol, cvCol)
-      val stats = assigned
-        .select(col("cell"), posexplode(col(vCol)).as(Seq("graft_pos", "graft_x")))
-        .groupBy(col("cell"), col("graft_pos"))
-        .agg((sum(col("graft_x").cast(dec)) / count(lit(1))).cast("double").as("graft_mx"))
-        .collect() // |cells|·dim rows — centroid state only, never data
-      val next = stats
+      val next = cellMeans(assigned, Seq("cell"), vCol)
         .map(r => (r.getLong(0), r.getInt(1), r.getDouble(2)))
         .groupBy(_._1).toSeq.sortBy(_._1)
         .map { case (cid, dims) => (cid, dims.sortBy(_._2).map(_._3)) }
       cents = next.toDF(cidCol, cvCol)
     }
     cents
+  }
+
+  /** Lloyd's mean step: per (`keys`, dimension) the mean of the array
+    * column `vCol` over the rows of `assigned`, collected as rows of
+    * (keys…, pos, mean). The sums go through fixed-scale decimals, so
+    * the means are bit-identical regardless of partitioning (same rule
+    * as [[graft.functions.det]]). A key with no rows has no mean.
+    */
+  private[operators] def cellMeans(assigned: DataFrame, keys: Seq[String],
+      vCol: String): Array[Row] = {
+    val dec = DataTypes.createDecimalType(30, 15)
+    assigned
+      .select(keys.map(col) :+ posexplode(col(vCol)).as(Seq("graft_pos", "graft_x")): _*)
+      .groupBy(keys.map(col) :+ col("graft_pos"): _*)
+      .agg((sum(col("graft_x").cast(dec)) / count(lit(1))).cast("double").as("graft_mx"))
+      .collect() // one row per (key, dim): centroid state only, never data
+  }
+
+  /** The fixed-anchor clustering of q115 and q261: the anchor set
+    * `vec_id < anchors` as (cid, cv), and every vector of the
+    * (vec_id, v) frame `e` as (vec_id, v, cluster) with its nearest
+    * anchor ([[assignToCentroids]]).
+    */
+  private[graft] def anchorCells(e: DataFrame, anchors: Int): (DataFrame, DataFrame) = {
+    val anchorSet = e.filter(col("vec_id") < anchors)
+      .select(col("vec_id").as("cid"), col("v").as("cv"))
+    (anchorSet, assignToCentroids(e, anchorSet, "vec_id", "v", "cid", "cv")
+      .select(col("vec_id"), col("v"), col("cell").as("cluster")))
   }
 
   /** IVF cell assignment: nearest of the `centroids` by cosine. Returns

@@ -1,10 +1,10 @@
 package graft.queries
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.{Q, Tables}
 import graft.operators.{ProductQuant, Similarity, TopK}
-import graft.functions.vec
+import graft.functions.{quant, vec}
 
 /** Similarity-search queries over the embeddings table (SURVEY.md §2
   * q50–q52).
@@ -21,6 +21,11 @@ import graft.functions.vec
   * AnnSpec measures recall vs q50 (the testdata embeddings are
   * uniform-random, the hostile case for ANN; recall thresholds in the
   * spec are calibrated to that).
+  *
+  * Every query is a composition of the same retrieval stages, each
+  * written once below: the query set, candidate pairs (against all
+  * vectors or inside probed IVF cells), a coarse top-K by an
+  * approximate score, and the exact re-rank.
   */
 object Ann {
 
@@ -35,17 +40,117 @@ object Ann {
       t.embeddings
         .select(col("vec_id"), vec.toDoubleArr(col("embedding")).as("v")))
 
-  private def queriesOf(e: DataFrame): DataFrame =
+  /** The query set: every 50th vector of `e`, as `query_id` and `cols`. */
+  private def queries(e: DataFrame, cols: Column*): DataFrame =
     e.filter(pmod(col("vec_id"), lit(50)) === 0)
-      .select(col("vec_id").as("query_id"), col("v").as("qv"))
+      .select(col("vec_id").as("query_id") +: cols: _*)
 
-  /** Exact cosine + top-k rank over a (query, candidate) frame. */
+  private def queriesOf(e: DataFrame): DataFrame = queries(e, col("v").as("qv"))
+
+  /** Joins the query vector `qv` onto `df` by `query_id`, from the
+    * broadcast query set.
+    */
+  private def withQueryVectors(df: DataFrame, e: DataFrame): DataFrame =
+    df.join(broadcast(queriesOf(e)), "query_id")
+
+  /** Candidates against all vectors: the broadcast query set `qs`
+    * crossed with `corpus`, minus each query itself.
+    */
+  private def allPairs(corpus: DataFrame, qs: DataFrame): DataFrame =
+    corpus.crossJoin(broadcast(qs)).filter(col("vec_id") =!= col("query_id"))
+
+  /** `e` with each vector's nearest IVF `cell`. */
+  private def cells(e: DataFrame, centroids: DataFrame): DataFrame =
+    Similarity.assignToCentroids(e, centroids, "vec_id", "v", "cid", "cv")
+
+  /** The probe list: the 5 cells nearest each query, as
+    * (query_id, cell). Ranked on ids and score only; callers join the
+    * query side on afterwards, so even this tiny window ships no
+    * vectors.
+    */
+  private def probeList(e: DataFrame, centroids: DataFrame): DataFrame =
+    coarseTopK(queriesOf(e).crossJoin(broadcast(centroids)), "cid",
+      vec.cosim(col("qv"), col("cv")), k = 5)
+      .select(col("query_id"), col("cid").as("cell"))
+
+  /** Candidates in probed cells: the (probe × query side) frame
+    * `probes` broadcast onto the cell-assigned corpus, minus each query
+    * itself. The corpus never shuffles.
+    */
+  private def probedPairs(probes: DataFrame, assigned: DataFrame): DataFrame =
+    broadcast(probes).join(assigned, "cell").filter(col("vec_id") =!= col("query_id"))
+
+  /** Coarse top-K: the `k` best `idCol`s per query by the approximate
+    * score `ccos`, as (query_id, idCol); the rank window ships ids and
+    * the score only.
+    */
+  private def coarseTopK(pairs: DataFrame, idCol: String, ccos: Column, k: Int): DataFrame =
+    TopK.perGroup(pairs.select(col("query_id"), col(idCol), ccos.as("ccos")),
+      Seq(col("query_id")), Seq(col("ccos").desc, col(idCol)), k, rankCol = "crn")
+      .select(col("query_id"), col(idCol))
+
+  /** Top-k rank over a (query_id, vec_id, cos) frame. */
   private def rankTopK(scored: DataFrame, k: Int): DataFrame =
     TopK.perGroup(scored, Seq(col("query_id")),
       Seq(col("cos").desc, col("vec_id")), k, rankCol = "rank")
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
         round(col("cos"), 4).as("score"), col("rank"))
       .orderBy(col("query_id"), col("rank"))
+
+  /** Exact cosine top-10 over pairs carrying `qv` and `v`, projected to
+    * (query_id, vec_id, cos) first so the rank exchange ships ids and
+    * the score, not the vectors.
+    */
+  private def exactTopK(pairs: DataFrame): DataFrame =
+    rankTopK(pairs.select(col("query_id"), col("vec_id"),
+      vec.cosim(col("qv"), col("v")).as("cos")), 10)
+
+  /** Exact re-rank of (query_id, vec_id) candidates: the candidate
+    * vector is joined back once per candidate and the query vector from
+    * the broadcast query set, so no vector rides a candidate-volume
+    * exchange.
+    */
+  private def rerank(candidates: DataFrame, e: DataFrame): DataFrame =
+    exactTopK(withQueryVectors(candidates.join(e, "vec_id"), e))
+
+  /** The deterministic quarter-sample the trained indexes learn from
+    * (VERDICT r4 #8): Lloyd only needs enough points per cell to
+    * estimate the means, so the two training passes scan 25% of the
+    * corpus; the sampled means differ from the full-corpus means by
+    * O(1/sqrt(cell sample)) and the assignment/probe stages are
+    * untouched. AnnSpec's clustered fixture pins that sampled training
+    * still collapses seed-blind skew.
+    */
+  private def trainingSample(e: DataFrame): DataFrame =
+    e.filter(pmod(col("vec_id"), lit(4)) === 0)
+
+  /** IVF centroids: 2 Lloyd iterations from [[ivfSeeds]]. */
+  private def trainedCentroids(e: DataFrame): DataFrame =
+    Similarity.trainCentroids(trainingSample(e), ivfSeeds(e), "vec_id", "v", "cid", "cv", iters = 2)
+
+  /** PQ codebooks: 8 subspaces × 16 entries, 2 Lloyd iterations. */
+  private def trainedCodebooks(e: DataFrame): ProductQuant.Codebooks =
+    ProductQuant.trainCodebooks(trainingSample(e), "vec_id", "v", m = 8, k = 16, iters = 2)
+
+  /** q53's and q54's int8 candidates: every (query, vector) pair over
+    * int8 vectors quantized from the stored floats, carrying `qq8`
+    * and `qv8`.
+    */
+  private def int8Pairs(t: Tables): DataFrame = {
+    val e8 = t.embeddings
+      .select(col("vec_id"), quant.quantizeI8(vec.toDoubleArr(col("embedding"))).as("qv8"))
+    allPairs(e8, queries(e8, col("qv8").as("qq8")))
+  }
+
+  private def int8Cosine: Column = quant.cosimI8(col("qq8"), col("qv8"))
+
+  /** The query set with its ADC lookup table and norm. */
+  private def adcQueries(e: DataFrame, cb: ProductQuant.Codebooks): DataFrame =
+    queriesOf(e).select(col("query_id"),
+      ProductQuant.queryLut(col("qv"), cb).as("lut"), vec.norm(col("qv")).as("qnorm"))
+
+  private def adcCosine(cb: ProductQuant.Codebooks): Column =
+    ProductQuant.adcCosine(col("lut"), col("qnorm"), col("code"), cb)
 
   /** q50: brute-force cosine top-10 for every 50th vector as query.
     * Oracle relies on dot products being a sequential fold on both
@@ -73,15 +178,8 @@ object Ann {
   }
 
   /** Exact brute-force tail — shared by q50 and AnnSpec fixtures. */
-  private[graft] def bruteTopK(e: DataFrame): DataFrame = {
-    // project to (query_id, vec_id, cos) before ranking so the top-k
-    // window exchange ships ids+score, not the vectors
-    val scored = e.crossJoin(broadcast(queriesOf(e)))
-      .filter(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id"),
-        vec.cosim(col("qv"), col("v")).as("cos"))
-    rankTopK(scored, 10)
-  }
+  private[graft] def bruteTopK(e: DataFrame): DataFrame =
+    exactTopK(allPairs(e, queriesOf(e)))
 
   /** q51: random-hyperplane LSH ANN — candidates share a bucket with
     * the query in ≥1 of 8 tables (4 bits each), exact rank on the
@@ -98,19 +196,12 @@ object Ann {
     val bucketed = Similarity.explodeBuckets(
       Similarity.withHyperplaneBuckets(e, "v", tables = 8, bitsPerTable = 4))
       .select(col("vec_id"), col("tbl"), col("bucket"))
-    val qs = bucketed
-      .filter(pmod(col("vec_id"), lit(50)) === 0)
-      .select(col("vec_id").as("query_id"), col("tbl"), col("bucket"))
-    val candidates = qs.join(bucketed, Seq("tbl", "bucket"))
+    val candidates = queries(bucketed, col("tbl"), col("bucket"))
+      .join(bucketed, Seq("tbl", "bucket"))
       .filter(col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id"))
       .distinct()
-    val scored = candidates
-      .join(e, "vec_id")
-      .join(broadcast(queriesOf(e)), "query_id")
-      .select(col("query_id"), col("vec_id"),
-        vec.cosim(col("qv"), col("v")).as("cos"))
-    rankTopK(scored, 10)
+    rerank(candidates, e)
   }
 
   /** Modulo-sampled IVF seed centroids (the untrained baseline). */
@@ -122,23 +213,9 @@ object Ann {
     * and AnnSpec's trained-vs-untrained comparison.
     */
   private[graft] def ivfTopK(e: DataFrame, centroids: DataFrame): DataFrame = {
-    val assigned = Similarity.assignToCentroids(e, centroids, "vec_id", "v", "cid", "cv")
-    // probe list: 5 nearest centroids per query — ranked on
-    // (query_id, cid, ccos) only, qv rejoined from the broadcast query
-    // set afterwards so even this tiny window ships no vectors
-    val probes = TopK.perGroup(
-      queriesOf(e).crossJoin(broadcast(centroids))
-        .select(col("query_id"), col("cid"),
-          vec.cosim(col("qv"), col("cv")).as("ccos")),
-      Seq(col("query_id")), Seq(col("ccos").desc, col("cid")), k = 5, rankCol = "crn")
-      .select(col("query_id"), col("cid").as("cell"))
-      .join(broadcast(queriesOf(e)), "query_id")
+    val probes = withQueryVectors(probeList(e, centroids), e)
       .select(col("query_id"), col("qv"), col("cell"))
-    val scored = broadcast(probes).join(assigned, "cell")
-      .filter(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id"),
-        vec.cosim(col("qv"), col("v")).as("cos"))
-    rankTopK(scored, 10)
+    exactTopK(probedPairs(probes, cells(e, centroids)))
   }
 
   /** q52: IVF — Lloyd-train the centroid set from modulo-sampled seeds
@@ -162,17 +239,7 @@ object Ann {
     */
   val q52 = Q.rowsOnly("q52_centroid_ivf") { t =>
     val e = vectors(t)
-    // train on the deterministic quarter-sample (VERDICT r4 #8): Lloyd
-    // only needs enough points per cell to estimate the means, so the
-    // two training passes scan 25% of the corpus — the sampled means
-    // differ from the full-corpus means by O(1/sqrt(cell sample)) and
-    // the assignment/probe stages are untouched. AnnSpec's clustered
-    // fixture pins that sampled training still collapses seed-blind
-    // skew.
-    val centroids = Similarity.trainCentroids(
-      e.filter(pmod(col("vec_id"), lit(4)) === 0),
-      ivfSeeds(e), "vec_id", "v", "cid", "cv", iters = 2)
-    ivfTopK(e, centroids)
+    ivfTopK(e, trainedCentroids(e))
   }
 
   /** q53: brute-force top-k over int8-QUANTIZED vectors
@@ -183,17 +250,7 @@ object Ann {
     * approximations by design; AnnSpec pins recall@10 vs exact q50.
     */
   val q53 = Q.rowsOnly("q53_ann_quantized") { t =>
-    import graft.functions.quant
-    val e = t.embeddings
-      .select(col("vec_id"),
-        quant.quantizeI8(vec.toDoubleArr(col("embedding"))).as("qv8"))
-    val qs = e.filter(pmod(col("vec_id"), lit(50)) === 0)
-      .select(col("vec_id").as("query_id"), col("qv8").as("qq8"))
-    val scored = e.crossJoin(broadcast(qs))
-      .filter(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id"),
-        quant.cosimI8(col("qq8"), col("qv8")).as("cos"))
-    rankTopK(scored, 10)
+    rankTopK(int8Pairs(t).select(col("query_id"), col("vec_id"), int8Cosine.as("cos")), 10)
   }
 
   /** q54: two-stage retrieval — int8 coarse scan (top-30 per query on
@@ -205,60 +262,20 @@ object Ann {
     * can only fix ordering errors inside the candidate set).
     */
   val q54 = Q.rowsOnly("q54_ann_rerank") { t =>
-    import graft.functions.quant
-    val e8 = t.embeddings
-      .select(col("vec_id"),
-        quant.quantizeI8(vec.toDoubleArr(col("embedding"))).as("qv8"))
-    val qs8 = e8.filter(pmod(col("vec_id"), lit(50)) === 0)
-      .select(col("vec_id").as("query_id"), col("qv8").as("qq8"))
-    val coarse = TopK.perGroup(
-      e8.crossJoin(broadcast(qs8))
-        .filter(col("vec_id") =!= col("query_id"))
-        .select(col("query_id"), col("vec_id"),
-          quant.cosimI8(col("qq8"), col("qv8")).as("ccos")),
-      Seq(col("query_id")), Seq(col("ccos").desc, col("vec_id")), k = 30, rankCol = "crn")
-      .select(col("query_id"), col("vec_id"))
-    val e = vectors(t)
-    val scored = coarse
-      .join(e, "vec_id")
-      .join(broadcast(queriesOf(e)), "query_id")
-      .select(col("query_id"), col("vec_id"),
-        vec.cosim(col("qv"), col("v")).as("cos"))
-    rankTopK(scored, 10)
+    val coarse = coarseTopK(int8Pairs(t), "vec_id", int8Cosine, k = 30)
+    rerank(coarse, vectors(t))
   }
 
-  /** The IVF-probed + int8-coarse + exact-rerank tail — shared by q83
-    * and AnnSpec's recall comparison. Carries the int8 twin on the
-    * same row as the assignment vector so the candidate tier needs no
+  /** q83's IVF-probed + int8-coarse + exact-rerank tail. Carries the
+    * int8 twin on the same row as the assignment vector so the candidate tier needs no
     * extra join.
     */
   private[graft] def ivfRerankTopK(e: DataFrame, centroids: DataFrame): DataFrame = {
-    import graft.functions.quant
-    val assigned8 = Similarity.assignToCentroids(
-      e.withColumn("qv8", quant.quantizeI8(col("v"))),
-      centroids, "vec_id", "v", "cid", "cv")
+    val assigned8 = cells(e.withColumn("qv8", quant.quantizeI8(col("v"))), centroids)
       .select(col("vec_id"), col("qv8"), col("cell"))
-    val probes = TopK.perGroup(
-      queriesOf(e).crossJoin(broadcast(centroids))
-        .select(col("query_id"), col("cid"),
-          vec.cosim(col("qv"), col("cv")).as("ccos")),
-      Seq(col("query_id")), Seq(col("ccos").desc, col("cid")), k = 5, rankCol = "crn")
-      .select(col("query_id"), col("cid").as("cell"))
-    val qs8 = e.filter(pmod(col("vec_id"), lit(50)) === 0)
-      .select(col("vec_id").as("query_id"), quant.quantizeI8(col("v")).as("qq8"))
-    val coarse = TopK.perGroup(
-      broadcast(probes.join(qs8, "query_id")).join(assigned8, "cell")
-        .filter(col("vec_id") =!= col("query_id"))
-        .select(col("query_id"), col("vec_id"),
-          quant.cosimI8(col("qq8"), col("qv8")).as("ccos")),
-      Seq(col("query_id")), Seq(col("ccos").desc, col("vec_id")), k = 30, rankCol = "crn")
-      .select(col("query_id"), col("vec_id"))
-    val scored = coarse
-      .join(e, "vec_id")
-      .join(broadcast(queriesOf(e)), "query_id")
-      .select(col("query_id"), col("vec_id"),
-        vec.cosim(col("qv"), col("v")).as("cos"))
-    rankTopK(scored, 10)
+    val qs8 = queries(e, quant.quantizeI8(col("v")).as("qq8"))
+    val pairs = probedPairs(probeList(e, centroids).join(qs8, "query_id"), assigned8)
+    rerank(coarseTopK(pairs, "vec_id", int8Cosine, k = 30), e)
   }
 
   /** q83: the COMPOSED production retrieval shape (VERDICT r7 "next"
@@ -279,53 +296,18 @@ object Ann {
     */
   val q83 = Q.rowsOnly("q83_ann_ivf_rerank") { t =>
     val e = vectors(t)
-    val centroids = Similarity.trainCentroids(
-      e.filter(pmod(col("vec_id"), lit(4)) === 0),
-      ivfSeeds(e), "vec_id", "v", "cid", "cv", iters = 2)
-    ivfRerankTopK(e, centroids)
+    ivfRerankTopK(e, trainedCentroids(e))
   }
 
-  /** The PQ-ADC coarse + exact-rerank tail — shared by q88 and
-    * AnnSpec's recall comparison. `coarseK` candidates survive the
-    * 8-byte-code scan into the exact double re-rank.
+  /** q88's PQ-ADC coarse + exact-rerank tail. `coarseK` candidates
+    * survive the 8-byte-code scan into the exact double re-rank.
     */
   private[graft] def pqRerankTopK(e: DataFrame, cb: ProductQuant.Codebooks,
       coarseK: Int): DataFrame = {
     val enc = e.select(col("vec_id"), ProductQuant.encode(col("v"), cb).as("code"))
-    val qs = queriesOf(e)
-      .select(col("query_id"),
-        ProductQuant.queryLut(col("qv"), cb).as("lut"),
-        vec.norm(col("qv")).as("qnorm"))
-    val coarse = TopK.perGroup(
-      enc.crossJoin(broadcast(qs))
-        .filter(col("vec_id") =!= col("query_id"))
-        .select(col("query_id"), col("vec_id"),
-          ProductQuant.adcCosine(col("lut"), col("qnorm"), col("code"), cb).as("ccos")),
-      Seq(col("query_id")), Seq(col("ccos").desc, col("vec_id")), k = coarseK, rankCol = "crn")
-      .select(col("query_id"), col("vec_id"))
-    val scored = coarse
-      .join(e, "vec_id")
-      .join(broadcast(queriesOf(e)), "query_id")
-      .select(col("query_id"), col("vec_id"),
-        vec.cosim(col("qv"), col("v")).as("cos"))
-    rankTopK(scored, 10)
+    rerank(coarseTopK(allPairs(enc, adcQueries(e, cb)), "vec_id", adcCosine(cb), coarseK), e)
   }
 
-  /** q88: product-quantization retrieval ([[ProductQuant]]) — the
-    * compression tier BELOW scalar int8: 8 subspaces × 16-entry
-    * codebooks store each vector as 8 code indices (8 B vs q53's
-    * 64 B at dim 64 — 32× below the double tier), and the coarse scan
-    * scores a candidate with 8 ADC table lookups + adds instead of 64
-    * multiplies. The LUT is computed once per QUERY (m·k sub-dots on
-    * the broadcast side); the corpus-side pass is a pure projection
-    * over the 8-byte codes, zero shuffle before the top-`coarseK`
-    * window (ids + score only); exact double re-rank restores
-    * precision for the 100 survivors. PQ distortion at 16 entries per
-    * 8-dim subspace is real — recall comes from the wide coarse set +
-    * exact tail, the standard PQ deployment shape; AnnSpec pins
-    * recall@10 vs exact q50, ScaleSpec pins the decade growth.
-    * Rows-only (scores are approximations by design).
-    */
   /** Corpus-proportional coarse-survivor budget (round 13): a FIXED
     * coarseK is the classic cap that silently dies at scale — ADC
     * distortion is per-vector, so as n grows linearly, more
@@ -343,50 +325,38 @@ object Ann {
   private def autoCoarseK(n: Long): Int =
     math.max(100L, n / 5L).min(Int.MaxValue.toLong).toInt
 
+  /** q88: product-quantization retrieval ([[ProductQuant]]) — the
+    * compression tier BELOW scalar int8: 8 subspaces × 16-entry
+    * codebooks store each vector as 8 code indices (8 B vs q53's
+    * 64 B at dim 64 — 32× below the double tier), and the coarse scan
+    * scores a candidate with 8 ADC table lookups + adds instead of 64
+    * multiplies. The LUT is computed once per QUERY (m·k sub-dots on
+    * the broadcast side); the corpus-side pass is a pure projection
+    * over the 8-byte codes, zero shuffle before the top-`coarseK`
+    * window (ids + score only); exact double re-rank restores
+    * precision for the 100 survivors. PQ distortion at 16 entries per
+    * 8-dim subspace is real — recall comes from the wide coarse set +
+    * exact tail, the standard PQ deployment shape; AnnSpec pins
+    * recall@10 vs exact q50, ScaleSpec pins the decade growth.
+    * Rows-only (scores are approximations by design).
+    */
   val q88 = Q.rowsOnly("q88_ann_pq") { t =>
     val e = vectors(t)
-    val cb = ProductQuant.trainCodebooks(
-      e.filter(pmod(col("vec_id"), lit(4)) === 0),
-      "vec_id", "v", m = 8, k = 16, iters = 2)
-    pqRerankTopK(e, cb, coarseK = autoCoarseK(t.embeddings.count()))
+    pqRerankTopK(e, trainedCodebooks(e), coarseK = autoCoarseK(t.embeddings.count()))
   }
 
-  /** The IVFADC tail: probed IVF cells bound WHICH vectors are
+  /** q89's IVFADC tail: probed IVF cells bound WHICH vectors are
     * touched, PQ-ADC codes set HOW CHEAPLY, exact re-rank restores
-    * precision — shared by q89 and AnnSpec's recall comparison. The PQ
-    * code rides the assignment row (like q83's int8 twin), so the
-    * candidate tier needs no extra join; the probe×(LUT, qnorm) frame
-    * broadcasts onto the assigned corpus.
+    * precision. The PQ code rides the assignment row (like q83's int8
+    * twin), so the candidate tier needs no extra join; the
+    * probe×(LUT, qnorm) frame broadcasts onto the assigned corpus.
     */
   private[graft] def ivfAdcTopK(e: DataFrame, centroids: DataFrame,
       cb: ProductQuant.Codebooks, coarseK: Int): DataFrame = {
-    val assignedPq = Similarity.assignToCentroids(
-      e.withColumn("code", ProductQuant.encode(col("v"), cb)),
-      centroids, "vec_id", "v", "cid", "cv")
+    val assignedPq = cells(e.withColumn("code", ProductQuant.encode(col("v"), cb)), centroids)
       .select(col("vec_id"), col("code"), col("cell"))
-    val probes = TopK.perGroup(
-      queriesOf(e).crossJoin(broadcast(centroids))
-        .select(col("query_id"), col("cid"),
-          vec.cosim(col("qv"), col("cv")).as("ccos")),
-      Seq(col("query_id")), Seq(col("ccos").desc, col("cid")), k = 5, rankCol = "crn")
-      .select(col("query_id"), col("cid").as("cell"))
-    val qsLut = queriesOf(e)
-      .select(col("query_id"),
-        ProductQuant.queryLut(col("qv"), cb).as("lut"),
-        vec.norm(col("qv")).as("qnorm"))
-    val coarse = TopK.perGroup(
-      broadcast(probes.join(qsLut, "query_id")).join(assignedPq, "cell")
-        .filter(col("vec_id") =!= col("query_id"))
-        .select(col("query_id"), col("vec_id"),
-          ProductQuant.adcCosine(col("lut"), col("qnorm"), col("code"), cb).as("ccos")),
-      Seq(col("query_id")), Seq(col("ccos").desc, col("vec_id")), k = coarseK, rankCol = "crn")
-      .select(col("query_id"), col("vec_id"))
-    val scored = coarse
-      .join(e, "vec_id")
-      .join(broadcast(queriesOf(e)), "query_id")
-      .select(col("query_id"), col("vec_id"),
-        vec.cosim(col("qv"), col("v")).as("cos"))
-    rankTopK(scored, 10)
+    val pairs = probedPairs(probeList(e, centroids).join(adcQueries(e, cb), "query_id"), assignedPq)
+    rerank(coarseTopK(pairs, "vec_id", adcCosine(cb), coarseK), e)
   }
 
   /** q89: IVFADC — the full production index shape from the PQ
@@ -403,12 +373,7 @@ object Ann {
     */
   val q89 = Q.rowsOnly("q89_ann_ivfadc") { t =>
     val e = vectors(t)
-    val centroids = Similarity.trainCentroids(
-      e.filter(pmod(col("vec_id"), lit(4)) === 0),
-      ivfSeeds(e), "vec_id", "v", "cid", "cv", iters = 2)
-    val cb = ProductQuant.trainCodebooks(
-      e.filter(pmod(col("vec_id"), lit(4)) === 0),
-      "vec_id", "v", m = 8, k = 16, iters = 2)
+    val (centroids, cb) = (trainedCentroids(e), trainedCodebooks(e))
     // same corpus-proportional budget as q88: the probed-cell
     // population grows ∝ n/5, so a fixed coarse list suffers the
     // identical distortion crowding inside the cells

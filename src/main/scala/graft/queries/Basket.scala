@@ -49,10 +49,10 @@ object Basket {
     // fact passes, observed in the q141 plan audit). One row per
     // basket with a ≤|alphabet| array — MEMORY_AND_DISK spills safely
     // at scale; Bench's clearCache() between runs keeps timings honest.
-    val sets = baskets
-      .groupBy(col(basketCol))
-      .agg(sort_array(collect_set(col(itemCol))).as("graft_items"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val sets = graft.CacheScope.trackedCache(
+      baskets
+        .groupBy(col(basketCol))
+        .agg(sort_array(collect_set(col(itemCol))).as("graft_items")))
     val pairs = sets
       .select(col("graft_items"), posexplode(col("graft_items")).as(Seq("graft_i", "brand_a")))
       .select(col("brand_a"),

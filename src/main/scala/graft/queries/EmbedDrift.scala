@@ -43,11 +43,7 @@ object EmbedDrift {
     * no-delta NULL guard on planted geometry.
     */
   def drift(e: DataFrame, anchors: Int, deltaMod: Int): DataFrame = {
-    val anchorSet = e.filter(col("vec_id") < anchors)
-      .select(col("vec_id").as("cid"), col("v").as("cv"))
-    val assigned = Similarity
-      .assignToCentroids(e, anchorSet, "vec_id", "v", "cid", "cv")
-      .select(col("vec_id"), col("v"), col("cell").as("cluster"))
+    val (anchorSet, assigned) = Similarity.anchorCells(e, anchors)
     val scored = assigned
       .join(broadcast(anchorSet
         .select(col("cid").as("cluster"), col("cv"))), "cluster")

@@ -34,16 +34,16 @@ object GrowthAccounting {
     * every state.
     */
   def flows(activity: DataFrame, userCol: String, dayCol: String): DataFrame = {
-    val weeks = activity
-      .select(col(userCol),
-        floor(datediff(col(dayCol), to_date(lit("1970-01-01"))) / 7).as("w"))
-      .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val weeks = graft.CacheScope.trackedCache(
+      activity
+        .select(col(userCol),
+          floor(datediff(col(dayCol), to_date(lit("1970-01-01"))) / 7).as("w"))
+        .distinct())
     val seq = Window.partitionBy(col(userCol)).orderBy(col("w"))
-    val marked = weeks
-      .withColumn("graft_prev", lag(col("w"), 1).over(seq))
-      .withColumn("graft_next", lead(col("w"), 1).over(seq))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val marked = graft.CacheScope.trackedCache(
+      weeks
+        .withColumn("graft_prev", lag(col("w"), 1).over(seq))
+        .withColumn("graft_next", lead(col("w"), 1).over(seq)))
     val states = marked
       .groupBy(col("w"))
       .agg(

@@ -42,8 +42,8 @@ object NegativeSample {
     // the full upstream join pipeline (observed: 18 parquet scans in
     // the q167 plan audit before this). Bounded by subjects × the
     // item vocabulary.
-    val pos = positives.select(col(subjCol), col(itemCol)).distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val pos = graft.CacheScope.trackedCache(
+      positives.select(col(subjCol), col(itemCol)).distinct())
     val cand = pos.select(col(subjCol)).distinct()
       .crossJoin(broadcast(items.select(col(itemCol)).distinct()))
     val neg = cand.join(pos, Seq(subjCol, itemCol), "left_anti")

@@ -36,11 +36,11 @@ object Retention {
     // cohort sizes, and the triangle join all read it — without
     // materialization each branch re-scans the fact (3 scans in the
     // pre-fix plan audit)
-    val weeks = activity
-      .select(col(userCol),
-        floor(datediff(col(dayCol), to_date(lit("1970-01-01"))) / 7).as("graft_w"))
-      .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val weeks = graft.CacheScope.trackedCache(
+      activity
+        .select(col(userCol),
+          floor(datediff(col(dayCol), to_date(lit("1970-01-01"))) / 7).as("graft_w"))
+        .distinct())
     val cohorts = weeks
       .groupBy(col(userCol))
       .agg(min(col("graft_w")).as("graft_c"))

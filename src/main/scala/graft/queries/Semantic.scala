@@ -92,11 +92,7 @@ object Semantic {
     * dispositions.
     */
   private[graft] def report(e: DataFrame, anchors: Int, tau: Double): DataFrame = {
-    val anchorSet = e.filter(col("vec_id") < anchors)
-      .select(col("vec_id").as("cid"), col("v").as("cv"))
-    val assigned = Similarity
-      .assignToCentroids(e, anchorSet, "vec_id", "v", "cid", "cv")
-      .select(col("vec_id"), col("v"), col("cell").as("cluster"))
+    val (_, assigned) = Similarity.anchorCells(e, anchors)
     // pair candidates live only inside a cell: key both sides on the
     // cluster id so the exchange ships each vector once, and the a<b
     // pair blow-up happens post-exchange, inside the join

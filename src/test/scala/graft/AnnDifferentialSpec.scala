@@ -1,14 +1,14 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.Similarity
+import graft.operators.{ProductQuant, Similarity}
 import scala.util.Random
 
 /** Fixed-seed differential tests for the vector-similarity tier:
   * the native argmax assignment vs an in-memory argmax with the same
   * tie and zero-norm rules, the LSH near-dup pipeline vs a brute-force
   * cosine scan over a planted-cluster corpus, survivor resolution vs
-  * union-find, and bit-determinism of centroid training.
+  * union-find, and bit-determinism of centroid and codebook training.
   */
 class AnnDifferentialSpec extends SparkSpec {
   import spark.implicits._
@@ -129,16 +129,23 @@ class AnnDifferentialSpec extends SparkSpec {
     CacheScope.releaseAll()
   }
 
-  test("trainCentroids is bit-deterministic across invocations") {
+  test("Lloyd trainers are bit-identical across runs and partitionings") {
     val data = vectors(115)
-    val df = data.toDF("id", "v")
     val seeds = data.take(6).map { case (id, v) => (id, v) }.toDF("cid", "cv")
-    def train() = Similarity.trainCentroids(df, seeds, "id", "v", "cid", "cv", iters = 3)
-      .collect().map(r => r.getLong(0) ->
-        r.getSeq[Double](1).map(java.lang.Double.doubleToLongBits)).toMap
-    val (a, b) = (train(), train())
-    assert(a == b, "trained centroids differ between identical invocations")
+    def bits(v: Seq[Double]) = v.map(java.lang.Double.doubleToLongBits)
+    def centroids(parts: Int) = Similarity.trainCentroids(
+        data.toDF("id", "v").repartition(parts), seeds, "id", "v", "cid", "cv", iters = 3)
+      .collect().map(r => r.getLong(0) -> bits(r.getSeq[Double](1))).toMap
+    def codebooks(parts: Int) = ProductQuant.trainCodebooks(
+        data.toDF("id", "v").repartition(parts), "id", "v", m = 4, k = 8, iters = 3)
+      .map(_.map(c => bits(c.toSeq)).toSeq).toSeq
+    val a = centroids(1)
+    assert(a == centroids(1), "trained centroids differ between identical invocations")
+    assert(a == centroids(7), "trained centroids differ between 1 and 7 partitions")
     assert(a.keySet.subsetOf(data.take(6).map(_._1).toSet),
       "cell ids not a subset of seed ids")
+    val cb = codebooks(1)
+    assert(cb == codebooks(1), "trained codebooks differ between identical invocations")
+    assert(cb == codebooks(7), "trained codebooks differ between 1 and 7 partitions")
   }
 }

@@ -219,8 +219,9 @@ class AnnSpec extends SparkSpec {
     assert(bad == 0L, s"$bad corpus vectors encoded out of range")
   }
 
-  test("q50/q51/q52/q53 rank paths all get partial WindowGroupLimit") {
-    for (name <- Seq("q50_ann_bruteforce", "q51_ann_lsh", "q52_centroid_ivf", "q53_ann_quantized"))
+  test("every ANN rank path gets partial WindowGroupLimit") {
+    for (name <- Seq("q50_ann_bruteforce", "q51_ann_lsh", "q52_centroid_ivf", "q53_ann_quantized",
+        "q54_ann_rerank", "q83_ann_ivf_rerank", "q88_ann_pq", "q89_ann_ivfadc"))
       assert(planOf(run(name)).contains("WindowGroupLimit"),
         s"$name top-k lost WindowGroupLimit (partial top-k before the rank shuffle)")
   }
@@ -253,8 +254,9 @@ class AnnSpec extends SparkSpec {
     assertBucketExchangesIdOnly("q44_dedup_embedding")
   }
 
-  test("q51/q52/q83: top-k window exchange carries (query_id, vec_id, cos) only") {
-    for (name <- Seq("q51_ann_lsh", "q52_centroid_ivf", "q83_ann_ivf_rerank")) {
+  test("q51/q52/q54/q83/q88/q89: rank exchange ships (query_id, vec_id, cos) only") {
+    for (name <- Seq("q51_ann_lsh", "q52_centroid_ivf", "q54_ann_rerank", "q83_ann_ivf_rerank",
+        "q88_ann_pq", "q89_ann_ivfadc")) {
       val windowEx = shuffles(run(name))
         .filter(_.outputPartitioning.toString.contains("query_id"))
       for (s <- windowEx; a <- s.output)

@@ -170,17 +170,35 @@ class ExpressionDifferentialSpec extends SparkSpec {
 
   // ---------------------------------------------------------------
   // Codegen'd cosine tiers vs in-memory folds (same accumulation
-  // order -> exact IEEE equality expected)
+  // order -> exact IEEE equality expected). The inputs go through a
+  // shuffle: a projection straight over `toDF`'s local relation is
+  // folded at optimization time by the interpreted projection, and
+  // would never run the generated code.
   // ---------------------------------------------------------------
+
+  /** Asserts that every expression named `names` is evaluated inside a
+    * whole-stage codegen stage of the collected `df`.
+    */
+  private def assertCodegen(df: org.apache.spark.sql.DataFrame, names: String*): Unit = {
+    import org.apache.spark.sql.execution.{InputAdapter, SparkPlan, WholeStageCodegenExec}
+    def stage(p: SparkPlan): Seq[SparkPlan] =
+      p +: (p match { case _: InputAdapter => Nil; case o => o.children.flatMap(stage) })
+    val generated = physicalNodes(df).collect { case w: WholeStageCodegenExec => stage(w.child) }
+      .flatten.flatMap(_.expressions).flatMap(_.map(_.prettyName)).toSet
+    for (n <- names)
+      assert(generated(n), s"$n is not evaluated under WholeStageCodegen:\n${planOf(df)}")
+  }
+
   test("cosim (codegen) is bit-exact vs the in-memory double fold") {
     val rnd = new Random(87)
     val dim = 24
     val vecs = (1 to 25).map(_ =>
       ((1 to dim).map(_ => rnd.nextGaussian()), (1 to dim).map(_ => rnd.nextGaussian())))
-    val rows = vecs.zipWithIndex.map { case ((a, b), i) => (i, a, b) }
-      .toDF("i", "a", "b")
-      .select(col("i"), vec.cosim(col("a"), col("b")).as("c")).collect()
-      .map(r => r.getInt(0) -> r.getDouble(1)).toMap
+    val df = vecs.zipWithIndex.map { case ((a, b), i) => (i, a, b) }
+      .toDF("i", "a", "b").repartition(2)
+      .select(col("i"), vec.cosim(col("a"), col("b")).as("c"))
+    val rows = df.collect().map(r => r.getInt(0) -> r.getDouble(1)).toMap
+    assertCodegen(df, "graft_cosine")
     vecs.zipWithIndex.foreach { case ((a, b), i) =>
       var dot = 0.0; var nx = 0.0; var ny = 0.0
       for (j <- 0 until dim) { dot += a(j) * b(j); nx += a(j) * a(j); ny += b(j) * b(j) }
@@ -195,14 +213,15 @@ class ExpressionDifferentialSpec extends SparkSpec {
     val dim = 64
     val vecs = (1 to 25).map(_ =>
       ((1 to dim).map(_ => rnd.nextGaussian()), (1 to dim).map(_ => rnd.nextGaussian())))
-    val rows = vecs.zipWithIndex.map { case ((a, b), i) => (i, a, b) }
-      .toDF("i", "a", "b")
+    val df = vecs.zipWithIndex.map { case ((a, b), i) => (i, a, b) }
+      .toDF("i", "a", "b").repartition(2)
       .select(col("i"),
         quant.quantizeI8(col("a")).as("qa"),
         quant.cosimI8(quant.quantizeI8(col("a")), quant.quantizeI8(col("b"))).as("ci8"),
         vec.cosim(col("a"), col("b")).as("c"))
-      .collect()
+    val rows = df.collect()
       .map(r => r.getInt(0) -> (r.getSeq[Byte](1), r.getDouble(2), r.getDouble(3))).toMap
+    assertCodegen(df, "graft_quantize_i8", "graft_cosine_i8")
     def q(v: Seq[Double]): Seq[Byte] = {
       val maxAbs = v.map(math.abs).max
       if (maxAbs == 0.0) v.map(_ => 0.toByte)

@@ -12,12 +12,19 @@ class OperatorsSpec extends SparkSpec {
   test("CacheScope.withCacheScope releases every graft cache created inside") {
     // start clean of graft caches: a prior suite's plan-identical cache
     // would otherwise be reused by the CacheManager and no NEW
-    // persistent RDD would appear inside the scope
+    // persistent RDD would appear inside the scope; an untracked one
+    // (a plain cache() left by another suite) the same
     CacheScope.releaseAll()
+    spark.catalog.clearCache()
     val before = spark.sparkContext.getPersistentRDDs.keySet
     CacheScope.withCacheScope {
       run("q41_dedup_minhash").count() // caches the slim signature frame
       run("q51_ann_lsh").count()       // caches the double-vector frame
+      // operator caches: Basket.lift, Retention.triangle,
+      // NegativeSample.negatives, GrowthAccounting.flows (two)
+      for (q <- Seq("q141_basket_lift", "q158_retention_triangle",
+          "q167_negative_sampling", "q169_growth_accounting"))
+        run(q).count()
       assert(spark.sparkContext.getPersistentRDDs.size > before.size,
         "expected live graft caches inside the scope")
     }

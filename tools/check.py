@@ -2,11 +2,17 @@
 """Local preflight replicating the driver's DuckDB-oracle compare.
 
 Usage: tools/check.py [sfDir] [outDir] [only_query ...]
+       tools/check.py --against OTHER_VERIFY_DIR outDir [only_query ...]
 
 Assumes `sbt "runMain graft.Verify <sfDir> <outDir>"` already populated
 outDir with <name>/ parquet dirs + oracle_sql.json. For each query:
 register the sf tables as DuckDB views, run the oracle SQL, load the
 Spark result parquet, sort columns by name, sort rows, compare exactly.
+
+With --against, no oracle runs: every query result in outDir is
+compared the same way, cell by cell, with the one in another Verify
+output directory (say, of the parent commit), rows-only queries
+included. A query missing from either directory fails.
 """
 import json, math, os, sys, glob
 
@@ -39,12 +45,14 @@ def cells_equal(a, b) -> bool:
     return a == b
 
 
-def compare(name: str, spark_df: pd.DataFrame, oracle_df: pd.DataFrame) -> bool:
+def compare(name: str, spark_df: pd.DataFrame, oracle_df: pd.DataFrame,
+            labels=("spark", "oracle")) -> bool:
+    ls, lo = labels
     if sorted(spark_df.columns) != sorted(oracle_df.columns):
-        print(f"FAIL {name}: columns spark={sorted(spark_df.columns)} oracle={sorted(oracle_df.columns)}")
+        print(f"FAIL {name}: columns {ls}={sorted(spark_df.columns)} {lo}={sorted(oracle_df.columns)}")
         return False
     if len(spark_df) != len(oracle_df):
-        print(f"FAIL {name}: rows spark={len(spark_df)} oracle={len(oracle_df)}")
+        print(f"FAIL {name}: rows {ls}={len(spark_df)} {lo}={len(oracle_df)}")
         return False
     s, o = norm(spark_df), norm(oracle_df)
     # The driver's hash compare is dtype-sensitive (e.g. a DuckDB
@@ -68,13 +76,41 @@ def compare(name: str, spark_df: pd.DataFrame, oracle_df: pd.DataFrame) -> bool:
         sv, ov = s[col].tolist(), o[col].tolist()
         for i, (a, b) in enumerate(zip(sv, ov)):
             if not cells_equal(a, b):
-                print(f"FAIL {name}: col={col} row={i}: spark={a!r} oracle={b!r}")
+                print(f"FAIL {name}: col={col} row={i}: {ls}={a!r} {lo}={b!r}")
                 return False
     print(f"OK   {name} ({len(s)} rows)")
     return True
 
 
+def read_result(con, out: str, name: str) -> pd.DataFrame:
+    return con.sql(f"SELECT * FROM read_parquet('{out}/{name}/*.parquet')").df()
+
+
+def results(out: str) -> set:
+    return {os.path.basename(os.path.dirname(f)) for f in glob.glob(f"{out}/*/*.parquet")}
+
+
+def against(other: str, out: str, only: set):
+    con = duckdb.connect()
+    mine, theirs = results(out), results(other)
+    n_ok = n_fail = 0
+    for name in sorted(only or mine | theirs):
+        missing = [d for d, have in ((out, mine), (other, theirs)) if name not in have]
+        if missing:
+            print(f"FAIL {name}: no result in {' or '.join(missing)}")
+            n_fail += 1
+        elif compare(name, read_result(con, out, name), read_result(con, other, name),
+                     labels=("this", "other")):
+            n_ok += 1
+        else:
+            n_fail += 1
+    print(f"== {n_ok} ok, {n_fail} fail ==")
+    return 1 if n_fail else 0
+
+
 def main():
+    if sys.argv[1:2] == ["--against"]:
+        sys.exit(against(sys.argv[2], sys.argv[3], set(sys.argv[4:])))
     sf = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     out = sys.argv[2] if len(sys.argv) > 2 else "/tmp/graft_verify"
     only = set(sys.argv[3:])
@@ -97,7 +133,7 @@ def main():
             print(f"FAIL {name}: no spark result parquet in {out}/{name}")
             n_fail += 1
             continue
-        spark_df = con.sql(f"SELECT * FROM read_parquet('{out}/{name}/*.parquet')").df()
+        spark_df = read_result(con, out, name)
         try:
             oracle_df = con.sql(oracles[name]).df()
         except Exception as e:
