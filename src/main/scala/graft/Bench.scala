@@ -95,13 +95,19 @@ object Bench {
     * they evict under pressure and spew CacheManager warnings (VERDICT
     * r2 #5), and a query timed with a predecessor's cache resident
     * isn't measuring its own plan. Every timing here and in
-    * `tools.Inspect --time` goes through this.
+    * `tools.Inspect --time` goes through this. The build's jobs run in
+    * [[Jobs]] phase `"<label> build"`, the count's in
+    * `"<label> action"`, for a [[JobCounter]] to tell apart.
     */
   def timeQuery(spark: SparkSession, q: Q, sfDir: String, label: String): Double = {
-    spark.sparkContext.setJobDescription(label)
+    val sc = spark.sparkContext
+    sc.setJobDescription(label)
     val t0 = System.nanoTime()
-    try { q.run(spark, sfDir).count(); (System.nanoTime() - t0) / 1e9 }
-    finally spark.catalog.clearCache()
+    try {
+      val df = Jobs.inPhase(sc, s"$label build")(q.run(spark, sfDir))
+      Jobs.inPhase(sc, s"$label action")(df.count())
+      (System.nanoTime() - t0) / 1e9
+    } finally spark.catalog.clearCache()
   }
 
   def main(args: Array[String]): Unit = {

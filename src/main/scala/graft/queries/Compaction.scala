@@ -69,6 +69,12 @@ object Compaction {
     * while the query's frame is being built, inside `Q.run`, so a
     * traced run counts them as plan construction (`queries.build_s`,
     * `queries.build_jobs`), not as the timed action's execution.
+    * That build runs 10 Spark jobs at sf0.001 (`Inspect --time`
+    * prints them): one per append (4; appends do not shuffle), the
+    * compaction's shuffle and write (2) and the result's collect (4).
+    * No store read infers its schema; each reads the store's recorded
+    * `_graft_schema`. A noop action over the result adds one job, 11
+    * in all, pinned in CommittedCompactionSpec.
     */
   val q254 = Q.of(
     "q254_committed_compaction",

@@ -334,7 +334,10 @@ object EventStreams {
     * rewrites exactly its own `graft_batch_id=<id>` tree, so restarts
     * never duplicate output (pinned by StreamingSpec's restart test).
     * Downstream reads through `PartitionedStore.readPartitioned` get
-    * planning-time pruning on `partitionCols` as usual.
+    * planning-time pruning on `partitionCols` as usual. They still
+    * infer the schema from parquet footers (one Spark job per read):
+    * only `PartitionedStore.readCommitted`, over [[sinkCommitted]]'s
+    * store, reads with the `_graft_schema` that `writeBatch` records.
     */
   def sinkPartitioned(stream: DataFrame, path: String, partitionCols: Seq[String],
       checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery =

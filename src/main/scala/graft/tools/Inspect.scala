@@ -10,7 +10,7 @@ import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 
-import graft.{Bench, GraftSession, Plans, Registry, SparkEntry}
+import graft.{Bench, GraftSession, JobCounter, Plans, Registry, SparkEntry}
 
 /** One inspection CLI over the query registry:
   * {{{
@@ -30,7 +30,10 @@ import graft.{Bench, GraftSession, Plans, Registry, SparkEntry}
   *    directory) one warm run, then `--reps` timed runs (default 2),
   *    all through [[Bench.timeQuery]], so each run starts with
   *    operator caches dropped; prints
-  *    `TIME <query> <dir> min=<s> median=<s> reps=<N>`. With two
+  *    `TIME <query> <dir> min=<s> median=<s> reps=<N>`, then
+  *    `JOBS <query> <dir> build=<n>,... action=<n>,...`: the Spark
+  *    jobs each timed run started while building the frame and while
+  *    counting it, counted by a [[graft.JobCounter]]. With two
   *    directories and `--ratio R`, their scale-factor ratio (second
   *    over first), it also prints `ScaleCurve`'s JSON line with each
   *    query's growth exponent log(min_2 / min_1) / log(R): 1 is
@@ -132,16 +135,20 @@ object Inspect {
 
   private def time(spark: SparkSession, dirs: Seq[String], names: Seq[String],
       reps: Int, ratio: Option[Double]): Unit = {
-    val mins = names.map { n =>
+    val jobs = new JobCounter(spark.sparkContext)
+    val mins = try names.map { n =>
       val q = Registry.byName(n)
       n -> dirs.map { d =>
         Bench.timeQuery(spark, q, d, s"warmup:$n")
         val secs = (1 to reps).map(i => Bench.timeQuery(spark, q, d, s"timed$i:$n")).sorted
         val median = (secs((reps - 1) / 2) + secs(reps / 2)) / 2
         println(f"TIME $n $d min=${secs.head}%.3f median=$median%.3f reps=$reps")
+        val counts = jobs.drain()
+        def perRun(phase: String) = (1 to reps).map(i => counts.getOrElse(s"timed$i:$n $phase", 0))
+        println(s"JOBS $n $d build=${perRun("build").mkString(",")} action=${perRun("action").mkString(",")}")
         secs.head
       }
-    }
+    } finally jobs.close()
     ratio.foreach { r =>
       val body = mins.map { case (n, t) =>
         f""""$n":{"lo_sec":${t(0)}%.3f,"hi_sec":${t(1)}%.3f,""" +

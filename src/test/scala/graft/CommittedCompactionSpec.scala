@@ -1,6 +1,8 @@
 package graft
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructType}
 
 import graft.sources.PartitionedStore
 
@@ -13,11 +15,45 @@ import graft.sources.PartitionedStore
   */
 class CommittedCompactionSpec extends SparkSpec {
 
-  private def freshDir(tag: String): String =
-    java.nio.file.Files.createTempDirectory(tag).toString + "/store"
+  private val roots = new java.util.concurrent.ConcurrentLinkedQueue[Path]()
+
+  /** A new store path under a temp root that `afterAll` deletes. */
+  private def freshDir(tag: String): String = {
+    val root = new Path(java.nio.file.Files.createTempDirectory(tag).toString)
+    roots.add(root)
+    s"$root/store"
+  }
+
+  override def afterAll(): Unit =
+    try roots.forEach(r => r.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(r, true))
+    finally super.afterAll()
 
   private def events = tables.events
     .select(col("event_id"), col("event_type"), col("value"))
+
+  /** The part-file count of every leaf directory under `root`
+    * (dot-prefixed directories, such as the compacted generations,
+    * skipped).
+    */
+  private def leafFiles(root: String): Seq[(String, Int)] = {
+    val top = new Path(root)
+    val fs = top.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def leaves(p: Path): Seq[Path] = {
+      val dirs = fs.listStatus(p).toSeq
+        .filter(s => s.isDirectory && !s.getPath.getName.startsWith(".")).map(_.getPath)
+      if (dirs.isEmpty) Seq(p) else dirs.flatMap(leaves)
+    }
+    leaves(top).map(l => l.toString -> fs.listStatus(l).count(_.getPath.getName.startsWith("part-")))
+  }
+
+  /** Fails unless every batch/partition leaf of the store holds more
+    * than one part file: appends keep their input fragmentation.
+    */
+  private def assertFragmented(dir: String): Unit = {
+    val files = leafFiles(dir)
+    assert(files.nonEmpty)
+    files.foreach { case (leaf, n) => assert(n > 1, s"$leaf holds $n part files before compaction") }
+  }
 
   /** (row count, id checksum) — the multiset fingerprint every read
     * must reproduce exactly.
@@ -37,6 +73,7 @@ class CommittedCompactionSpec extends SparkSpec {
         dir, Seq("event_type"), b)
       PartitionedStore.commitBatchWatermark(spark, dir, b)
     }
+    assertFragmented(dir)
     val expect = fingerprint(PartitionedStore.readCommitted(spark, dir))
     assert(expect._1 > 0)
 
@@ -94,13 +131,13 @@ class CommittedCompactionSpec extends SparkSpec {
     PartitionedStore.vacuumCommitted(spark, dir, keep = 0)
     assert(fingerprint(PartitionedStore.readCommitted(spark, dir)) == expect)
     val (root, fs) = {
-      val pp = new org.apache.hadoop.fs.Path(dir)
+      val pp = new Path(dir)
       (pp, pp.getFileSystem(spark.sparkContext.hadoopConfiguration))
     }
     assert(!fs.listStatus(root).exists(
       _.getPath.getName.startsWith("graft_batch_id=")),
       "vacuum left covered root batch trees behind")
-    assert(fs.listStatus(new org.apache.hadoop.fs.Path(root, ".graft_compacted"))
+    assert(fs.listStatus(new Path(root, ".graft_compacted"))
       .count(_.isDirectory) == 1, "vacuum left stale generations behind")
   }
 
@@ -108,18 +145,11 @@ class CommittedCompactionSpec extends SparkSpec {
     val dir = freshDir("graft_cc_files")
     PartitionedStore.writeBatch(events.repartition(7), dir, Seq("event_type"), 0L)
     PartitionedStore.commitBatchWatermark(spark, dir, 0L)
+    assertFragmented(dir)
     val g = PartitionedStore.compactCommitted(spark, dir, Seq("event_type"))
-    val genRoot = new org.apache.hadoop.fs.Path(s"$dir/.graft_compacted/$g")
-    val fs = genRoot.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def leaves(p: org.apache.hadoop.fs.Path): Seq[org.apache.hadoop.fs.Path] = {
-      val entries = fs.listStatus(p).toSeq
-      val dirs = entries.filter(_.isDirectory).map(_.getPath)
-      if (dirs.isEmpty) Seq(p) else dirs.flatMap(leaves)
-    }
-    leaves(genRoot).foreach { leaf =>
-      val n = fs.listStatus(leaf).count(_.getPath.getName.startsWith("part-"))
-      assert(n == 1, s"$leaf holds $n files, want 1")
-    }
+    val files = leafFiles(s"$dir/.graft_compacted/$g")
+    assert(files.nonEmpty)
+    files.foreach { case (leaf, n) => assert(n == 1, s"$leaf holds $n files, want 1") }
   }
 
   test("two concurrent compactors never lose a committed batch (last pointer wins, both generations intact)") {
@@ -130,6 +160,7 @@ class CommittedCompactionSpec extends SparkSpec {
         dir, Seq("event_type"), b)
       PartitionedStore.commitBatchWatermark(spark, dir, b)
     }
+    assertFragmented(dir)
     val expect = fingerprint(PartitionedStore.readCommitted(spark, dir))
     // race two compactors head-to-head: the rename-allocation must
     // give them DISTINCT generation dirs, and whichever pointer lands
@@ -147,14 +178,14 @@ class CommittedCompactionSpec extends SparkSpec {
       "a committed batch was lost across the concurrent compactions")
     // both generations allocated distinct slots and both are complete
     // (each carries a cover file); the pointer resolves to one of them
-    val cdir = new org.apache.hadoop.fs.Path(s"$dir/.graft_compacted")
+    val cdir = new Path(s"$dir/.graft_compacted")
     val fs = cdir.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val gens = fs.listStatus(cdir).toSeq
       .filter(s => s.isDirectory && !s.getPath.getName.startsWith("."))
       .map(_.getPath.getName.toLong).sorted
     assert(gens == Seq(1L, 2L), s"generations collided or went missing: $gens")
     gens.foreach { g =>
-      assert(fs.exists(new org.apache.hadoop.fs.Path(cdir, s"$g/_graft_cover")),
+      assert(fs.exists(new Path(cdir, s"$g/_graft_cover")),
         s"generation $g is incomplete")
     }
     val live = PartitionedStore.compactionGeneration(spark, dir)
@@ -195,5 +226,64 @@ class CommittedCompactionSpec extends SparkSpec {
     PartitionedStore.vacuumCommitted(spark, dir, keep = 0)
     assert(fingerprint(PartitionedStore.readCommitted(spark, dir)) ==
       fingerprint(events))
+  }
+
+  test("writeBatch records the read schema: a changed type fails naming both schemas, nullability alone does not") {
+    val dir = freshDir("graft_cc_schema")
+    PartitionedStore.writeBatch(events, dir, Seq("event_type"), 0L)
+    PartitionedStore.commitBatchWatermark(spark, dir, 0L)
+    val e = intercept[IllegalArgumentException] {
+      PartitionedStore.writeBatch(
+        events.withColumn("value", col("value").cast("string")), dir, Seq("event_type"), 1L)
+    }
+    assert(e.getMessage.contains("value:string") && e.getMessage.contains("value:double"),
+      e.getMessage)
+    assert(!leafFiles(dir).exists(_._1.contains("graft_batch_id=1")),
+      "the rejected batch wrote files")
+    // the same columns, every one non-nullable
+    val required = spark.createDataFrame(events.rdd,
+      StructType(events.schema.map(_.copy(nullable = false))))
+    PartitionedStore.writeBatch(required, dir, Seq("event_type"), 1L)
+    PartitionedStore.commitBatchWatermark(spark, dir, 1L)
+    val (n, ids) = fingerprint(events)
+    assert(fingerprint(PartitionedStore.readCommitted(spark, dir)) == (2 * n, 2 * ids))
+  }
+
+  test("graft_batch_id reads as bigint whatever the batch ids, before and after compaction") {
+    Seq(Seq(0L, 1L), Seq(7L, 5000000000L)).foreach { ids =>
+      val dir = freshDir("graft_cc_type")
+      ids.foreach { b =>
+        PartitionedStore.writeBatch(events, dir, Seq("event_type"), b)
+        PartitionedStore.commitBatchWatermark(spark, dir, b)
+      }
+      def batchIdType = PartitionedStore.readCommitted(spark, dir).schema("graft_batch_id").dataType
+      assert(batchIdType == LongType, s"batch ids $ids")
+      PartitionedStore.compactCommitted(spark, dir, Seq("event_type"))
+      assert(batchIdType == LongType, s"batch ids $ids, compacted")
+    }
+  }
+
+  test("building a readCommitted frame runs no Spark job (root only, and generation + root)") {
+    val dir = freshDir("graft_cc_jobs")
+    def batch(b: Long): Unit = {
+      PartitionedStore.writeBatch(
+        events.filter(pmod(col("event_id"), lit(3)) === b), dir, Seq("event_type"), b)
+      PartitionedStore.commitBatchWatermark(spark, dir, b)
+    }
+    def built = Jobs.counted(spark.sparkContext)(PartitionedStore.readCommitted(spark, dir))
+    batch(0L); batch(1L)
+    assert(built._2 === 0)
+    PartitionedStore.compactCommitted(spark, dir, Seq("event_type"))
+    batch(2L)
+    val (df, jobs) = built
+    assert(jobs === 0)
+    assert(fingerprint(df) == fingerprint(events))
+  }
+
+  test("q254 runs at most 11 Spark jobs: appends do not shuffle and store reads do not infer") {
+    def once() = run("q254_committed_compaction").write.format("noop").mode("overwrite").save()
+    once() // input schemas memoised, as in any warm run
+    val (_, jobs) = Jobs.counted(spark.sparkContext)(once())
+    assert(jobs <= 11, s"q254 ran $jobs Spark jobs")
   }
 }

@@ -37,6 +37,11 @@ class InspectSpec extends SparkSpec {
     val times = out.collect { case timing(min, median) => (min.toDouble, median.toDouble) }
     assert(times.size === 2, out)
     times.foreach { case (min, median) => assert(min > 0 && min <= median) }
+    // per timed run, the jobs of the build and of the count
+    val jobs = s"""JOBS $q \\Q$sfDir\\E build=(\\d+),(\\d+) action=(\\d+),(\\d+)""".r
+    val counts = out.collect { case jobs(b1, b2, a1, a2) => Seq(b1, b2, a1, a2).map(_.toInt) }
+    assert(counts.size === 2, out)
+    counts.foreach(c => assert(c(2) >= 1 && c(3) >= 1, out))
     assert(out.count(_.startsWith("""{"metric":"scale_curve",""")) === 1, out)
     assert(out.exists(_.contains(s""""$q":{"lo_sec":""")), out)
   }

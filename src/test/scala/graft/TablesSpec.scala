@@ -1,10 +1,7 @@
 package graft
 
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
-import java.util.concurrent.{CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{TimestampNTZType, TimestampType}
@@ -22,36 +19,8 @@ class TablesSpec extends SparkSpec {
     "lineitem" -> (() => t.lineitem), "events" -> (() => t.events),
     "documents" -> (() => t.documents), "embeddings" -> (() => t.embeddings))
 
-  /** Jobs started while `f` runs. Listener events arrive
-    * asynchronously, in order, so a marker job run after `f` is waited
-    * for: once its start is seen, every job `f` started has been
-    * counted.
-    */
-  private def jobsDuring(f: => Unit): Int = {
-    val sc = spark.sparkContext
-    val started = new AtomicInteger(0)
-    val marker = new CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
-          case Some("tables-spec") => started.incrementAndGet()
-          case Some("tables-spec-marker") => marker.countDown()
-          case _ =>
-        }
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup("tables-spec", "reads")
-      f
-      sc.setJobGroup("tables-spec-marker", "marker")
-      sc.parallelize(Seq(1), 1).count()
-      assert(marker.await(60, TimeUnit.SECONDS), "marker job never reported")
-      started.get
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
-    }
-  }
+  /** Jobs started while `f` runs. */
+  private def jobsDuring(f: => Unit): Int = Jobs.counted(spark.sparkContext)(f)._2
 
   private def withTempDir[T](f: Path => T): T = {
     val d = Files.createTempDirectory("graft-tables")
