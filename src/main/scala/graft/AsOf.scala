@@ -19,12 +19,11 @@ import org.apache.spark.sql.functions.lit
   * `asOf` re-plans the literals (pinned per query in RelationalSpec),
   * and the DuckDB oracle is generated from the same value so the
   * correctness gate exercises the parameterization itself. Registered
-  * instances pin a fixed date for reproducibility; a user calls
-  * `qNNFor(AsOf.today)`-style builders with the real clock.
+  * instances pin a fixed date for reproducibility; a user passes
+  * `AsOf(LocalDate.now())` to a `qNNFor` builder for the real clock.
   */
 final case class AsOf(date: LocalDate) {
   def minusDays(n: Long): AsOf = AsOf(date.minusDays(n))
-  def minusMonths(n: Long): AsOf = AsOf(date.minusMonths(n))
   /** Midnight at the date, as a Spark plan-time literal value. */
   def ts: java.sql.Timestamp = java.sql.Timestamp.valueOf(date.atStartOfDay)
   /** Midnight at the date, as a literal Column. */
@@ -36,8 +35,4 @@ final case class AsOf(date: LocalDate) {
 
 object AsOf {
   def apply(s: String): AsOf = AsOf(LocalDate.parse(s))
-  /** The real clock — NOT used by any registered query (the gate needs
-    * reproducible plans); the entry point for library users.
-    */
-  def today: AsOf = AsOf(LocalDate.now())
 }

@@ -38,9 +38,6 @@ object FrameContainer {
     buf.array()
   }
 
-  /** Total header parse: frame count, or None if not a valid container. */
-  def frameCount(bytes: Array[Byte]): Option[Int] = index(bytes).map(_.length)
-
   /** Per-frame (offset, length) index, validated against the payload
     * size — the seek table every sampled access goes through.
     */

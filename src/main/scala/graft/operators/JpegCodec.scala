@@ -11,10 +11,10 @@ import graft.operators.PngCodec.Png
 /** JPEG decode/encode over the JDK's built-in imageio JPEG plugin —
   * no external codec library needed (VERDICT r6 "What's missing" #1:
   * real training corpora are overwhelmingly JPEG; the JDK ships a
-  * reader and writer for it). Unlike [[PngCodec]]/[[PpmCodec]], this
-  * tier does not re-implement the entropy coding from the public spec
-  * — JPEG's DCT path is three orders of magnitude more work and an
-  * audited implementation already sits in every JRE — so the codec
+  * reader and writer for it). Unlike [[PngCodec]], this tier does not
+  * re-implement the entropy coding from the public spec — JPEG's DCT
+  * path is three orders of magnitude more work and an audited
+  * implementation already sits in every JRE — so the codec
   * boundary here is the `javax.imageio` API, wrapped in the same
   * TOTAL-decode contract as the pure-JVM tiers: any malformed, null,
   * oversized, or non-JPEG payload yields `None`, never a throw.
@@ -26,7 +26,7 @@ import graft.operators.PngCodec.Png
   * composes across formats without conversion.
   *
   * Determinism note: JPEG is lossy and the decode of a given file is
-  * implementation-defined at the ±1-sample level, so unlike PNG/PPM
+  * implementation-defined at the ±1-sample level, so unlike PNG
   * there is no cross-engine bit-exact oracle; within one JVM the
   * decode and the fixed-quality encode are deterministic, which is
   * what the differential specs pin.
@@ -39,7 +39,7 @@ object JpegCodec {
   ImageIO.setUseCache(false)
 
   /** JPEG/JFIF magic: every JPEG stream starts with the SOI marker.
-    * Checked before handing bytes to imageio so a PNG/PPM/garbage
+    * Checked before handing bytes to imageio so a PNG/garbage
     * payload is rejected as cheaply as the pure-JVM codecs reject a
     * wrong signature (ImageIO.read would otherwise happily decode
     * OTHER formats, silently widening this tier's contract).

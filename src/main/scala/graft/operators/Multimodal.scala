@@ -3,12 +3,6 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders}
 import org.apache.spark.sql.functions._
 
-/** One decoded row of media features — the schema a real decoder
-  * batch returns (mirrors the decodeStub column pipeline).
-  */
-final case class MediaFeatures(doc_id: Long, n_bytes: Long, checksum: String,
-    n_frames: Long, first_frame: String)
-
 /** One resized + frame-sampled media row (the [[Multimodal.resizeFramesBatched]]
   * output schema): metadata dims are recomputed for the resize, the
   * payload is replaced by its resized bytes' digest + sizes, and the
@@ -18,17 +12,14 @@ final case class ResizedMedia(doc_id: Long, format: String,
     out_width: Long, out_height: Long, n_bytes_in: Long, n_bytes_out: Long,
     checksum: String, n_frames: Long, first_frame: String)
 
-/** One really-decoded image row ([[Multimodal.decodePpmBatched]]):
-  * dims come from the PPM header, features from the raster. `ok =
+/** One really-decoded image row ([[Multimodal.decodePngBatched]],
+  * [[Multimodal.decodeJpegBatched]]): dims come from the image
+  * header, features from the raster. `ok =
   * false` rows carry the doc through with nulls-as-zeros instead of
   * killing the batch — decode is total.
   */
 final case class DecodedImage(doc_id: Long, ok: Boolean, width: Long, height: Long,
     mean_r: Double, mean_g: Double, mean_b: Double, n_bytes: Long)
-
-/** One really-resized image row ([[Multimodal.resizePpmBatched]]). */
-final case class ResizedImage(doc_id: Long, ok: Boolean, out_width: Long,
-    out_height: Long, n_bytes_in: Long, n_bytes_out: Long, checksum: String)
 
 /** One perceptually-hashed image row ([[Multimodal.aHashPngBatched]]):
   * `ahash` is the 63-bit average-hash of the decoded raster (8×8
@@ -75,24 +66,23 @@ final case class AudioFingerprint(doc_id: Long, ok: Boolean,
   * Models the Spark-side shape of an image/audio pipeline: an opaque
   * `binary` payload column + a typed metadata struct, with
   * decode/feature steps as column pipelines downstream of the payload.
-  * General image/audio codecs (jpeg/png/audio libs) are NOT available
-  * in this environment — `decodeStub` is a clearly-marked
-  * deterministic fake (strided hash "frames" standing in for sampled
-  * decoded frames) — but THREE real formats are fully implemented
-  * with pure-JVM codecs: binary PPM ([[PpmCodec]]), PNG via JDK zlib
-  * ([[PngCodec]] — CRC-checked chunks, inflate, five-filter scanline
-  * reconstruction), and 16-bit PCM WAV ([[WavCodec]]), each with real
-  * decode, resampling, and re-encode running inside the same batched
-  * plumbing ([[decodePpmBatched]]/[[resizePpmBatched]]/
-  * [[decodePngBatched]]/[[resizePngBatched]]/[[decodeWavBatched]],
-  * differentially tested in MultimodalSpec). The plumbing that
-  * matters at scale IS real either way: payloads stay opaque bytes
-  * end-to-end, metadata travels as a struct column, per-row cost is
-  * O(payload bytes), and nothing shuffles until an explicit aggregate.
+  * General image/audio codec libraries are NOT available in this
+  * environment — `decodeStub` is a clearly-marked deterministic fake
+  * (strided hash "frames" standing in for sampled decoded frames) —
+  * but three real formats decode inside the same batched plumbing:
+  * PNG via JDK zlib ([[PngCodec]] — CRC-checked chunks, inflate,
+  * five-filter scanline reconstruction), JPEG via the JDK's imageio
+  * ([[JpegCodec]]) and 16-bit PCM WAV ([[WavCodec]])
+  * ([[decodePngBatched]]/[[decodeJpegBatched]]/[[decodeWavBatched]],
+  * rolled up by q82 and differentially tested in MultimodalSpec and
+  * JpegAudioSpec). The plumbing that matters at scale IS real either
+  * way: payloads stay opaque bytes end-to-end, metadata travels as a
+  * struct column, per-row cost is O(payload bytes), and nothing
+  * shuffles until an explicit aggregate.
   *
   * On a real cluster the stub body is replaced by an `mapInPandas` /
   * JNI decode over the same (payload, meta) schema — the surrounding
-  * plan is unchanged, as the PPM path demonstrates.
+  * plan is unchanged, as the PNG path demonstrates.
   */
 object Multimodal {
 
@@ -111,11 +101,11 @@ object Multimodal {
     * codec. "Frame samples" are md5 digests of strided 16-BYTE windows
     * of the raw payload (stride 64 ≈ frame sampling); `checksum` is
     * the md5 of the raw payload bytes. Everything is derived from the
-    * payload BYTES — the same bytes [[decodeBatchedStub]] strides — so
-    * the two decode shapes are equivalent by construction for any
-    * input (ADVICE r3: the old char-strided form only agreed with the
-    * byte-strided batch path on single-byte text). Schema and batch
-    * shape match what a real decoder UDF would produce.
+    * payload BYTES — the same bytes [[resizeFramesBatched]] strides at
+    * factor 1 — so the two shapes are equivalent by construction for
+    * any input (ADVICE r3: the old char-strided form only agreed with
+    * the byte-strided batch path on single-byte text). Schema and
+    * batch shape match what a real decoder UDF would produce.
     */
   def decodeStub(df: DataFrame): DataFrame =
     df.withColumn("n_bytes", octet_length(col("payload")).cast("long"))
@@ -127,7 +117,7 @@ object Multimodal {
       .withColumn("first_frame", element_at(col("frames"), 1))
 
   /** Per-partition md5-hex closure — ONE MessageDigest per task, the
-    * content-address format every resize/decode batch path shares.
+    * content address [[resizeFramesBatched]] emits.
     */
   private def md5Hex(): Array[Byte] => String = {
     val md = java.security.MessageDigest.getInstance("MD5")
@@ -146,10 +136,8 @@ object Multimodal {
   private def byteLen(payload: Array[Byte]): Long =
     if (payload == null) 0L else payload.length.toLong
 
-  implicit val mediaEnc: Encoder[MediaFeatures] = Encoders.product[MediaFeatures]
   implicit val resizedEnc: Encoder[ResizedMedia] = Encoders.product[ResizedMedia]
   implicit val decodedImgEnc: Encoder[DecodedImage] = Encoders.product[DecodedImage]
-  implicit val resizedImgEnc: Encoder[ResizedImage] = Encoders.product[ResizedImage]
   implicit val decodedAudEnc: Encoder[DecodedAudio] = Encoders.product[DecodedAudio]
   implicit val imageHashEnc: Encoder[ImageHash] = Encoders.product[ImageHash]
   implicit val audioFpEnc: Encoder[AudioFingerprint] = Encoders.product[AudioFingerprint]
@@ -175,7 +163,7 @@ object Multimodal {
   }
 
   /** REAL batched audio decode for 16-bit PCM WAV payloads
-    * ([[WavCodec]]) — the audio twin of [[decodePpmBatched]]: header
+    * ([[WavCodec]]) — the audio twin of [[decodePngBatched]]: header
     * metadata and PCM features per row, `ok = false` for anything the
     * total decoder rejects, input partitioning preserved, no shuffle.
     */
@@ -199,32 +187,9 @@ object Multimodal {
       DecodedAudio(id, ok = false, 0L, 0L, 0L, 0.0, 0.0, byteLen(payload))
   }
 
-  /** REAL batched image decode for PPM payloads ([[PpmCodec]]): per
-    * task the codec runs as plain JVM code, per row the header is
-    * parsed and channel means computed from the raster — the same
-    * iterator shape as [[decodeBatchedStub]] but with genuine decode
-    * work. Malformed/non-PPM payloads yield `ok = false` rows (a
-    * decode stage must not die on one corrupt payload out of
-    * billions). Preserves input partitioning; no shuffle.
-    */
-  def decodePpmBatched(df: DataFrame, idCol: String): Dataset[DecodedImage] =
-    payloadBatched(df, idCol)(() => ()) { (_, id, payload) =>
-      rasterRow(id, payload, PpmCodec.decode(payload))
-    }
-
-  /** REAL batched audio decode for ANY JDK-supported container —
-    * AIFF / AU / WAV via [[AudioContainers]] (javax.sound providers):
-    * the container-agnostic generalization of [[decodeWavBatched]],
-    * same row contract, partitioning preserved, no shuffle.
-    */
-  def decodeAudioBatched(df: DataFrame, idCol: String): Dataset[DecodedAudio] =
-    payloadBatched(df, idCol)(() => ()) { (_, id, payload) =>
-      audioRow(id, payload, AudioContainers.decode(payload))
-    }
-
   /** REAL batched image decode for JPEG payloads ([[JpegCodec]] over
     * the JDK's imageio plugin) — same contract as
-    * [[decodePpmBatched]]: header dims and channel means per row,
+    * [[decodePngBatched]]: header dims and channel means per row,
     * `ok = false` for anything the total decoder rejects (non-JPEG
     * signatures, CMYK, malformed streams), input partitioning
     * preserved, no shuffle. Gray means fan out to (r, g, b) like the
@@ -235,8 +200,8 @@ object Multimodal {
       rasterRow(id, payload, JpegCodec.decode(payload))
     }
 
-  /** The shared raster row contract ([[PngCodec.Png]] — JPEG and PPM
-    * decode into the same type): header dims + channel means, gray (+alpha)
+  /** The shared raster row contract ([[PngCodec.Png]] — JPEG
+    * decodes into the same type): header dims + channel means, gray (+alpha)
     * fanned out to (r, g, b); `ok = false` carry-through otherwise.
     */
   private def rasterRow(id: Long, payload: Array[Byte],
@@ -253,48 +218,11 @@ object Multimodal {
       DecodedImage(id, ok = false, 0L, 0L, 0.0, 0.0, 0.0, byteLen(payload))
   }
 
-  /** REAL batched resize for JPEG payloads: decode → nearest-neighbor
-    * resample ([[PngCodec.resizeNearest]] on the shared raster type)
-    * → fixed-quality JPEG re-encode, md5 of the re-encoded bytes as
-    * the output content address. Same error-tolerance and
-    * partition-preservation as the PNG/PPM twins. (JPEG re-encode is
-    * deterministic within a JVM but not across decoder
-    * implementations — see [[JpegCodec]] — so the checksum is a
-    * content address, not a cross-engine oracle.)
-    */
-  def resizeJpegBatched(df: DataFrame, idCol: String,
-      outW: Int, outH: Int): Dataset[ResizedImage] =
-    resizeRasterBatched(df, idCol, outW, outH)(
-      JpegCodec.decode, img => JpegCodec.encode(PngCodec.resizeNearest(img, outW, outH)))
-
-  /** Shared raster resize scaffold: decode → per-row pixel-buffer gate
-    * (checking here instead of letting resizeNearest's require throw
-    * keeps a mixed gray/RGBA corpus from killing the task on the first
-    * wide row — `ok = false`, like any other unprocessable payload) →
-    * resample + re-encode via `enc` → md5 of the re-encoded bytes as
-    * the output content address.
-    */
-  private def resizeRasterBatched(df: DataFrame, idCol: String,
-      outW: Int, outH: Int)(
-      dec: Array[Byte] => Option[PngCodec.Png],
-      enc: PngCodec.Png => Array[Byte]): Dataset[ResizedImage] = {
-    require(outW > 0 && outH > 0)
-    payloadBatched(df, idCol)(md5Hex _) { (hex, id, payload) =>
-      dec(payload) match {
-        case Some(img) if outW.toLong * outH * img.channels <= PngCodec.MaxPixelBytes =>
-          val out = enc(img)
-          ResizedImage(id, ok = true, outW.toLong, outH.toLong,
-            byteLen(payload), out.length.toLong, hex(out))
-        case _ =>
-          ResizedImage(id, ok = false, 0L, 0L, byteLen(payload), 0L, null)
-      }
-    }
-  }
-
-  /** REAL batched image decode for PNG payloads ([[PngCodec]]) — same
-    * contract as [[decodePpmBatched]], but the decode is the full PNG
-    * critical path: CRC-checked chunk walk, zlib inflate, five-filter
-    * scanline reconstruction. Grayscale means fan out to (r, g, b);
+  /** REAL batched image decode for PNG payloads ([[PngCodec]]): per
+    * task the codec runs as plain JVM code, per row the decode is the
+    * full PNG critical path — CRC-checked chunk walk, zlib inflate,
+    * five-filter scanline reconstruction — and channel means come from
+    * the raster. Grayscale means fan out to (r, g, b);
     * alpha, when present, is ignored for the channel means. Malformed
     * payloads yield `ok = false` rows; input partitioning preserved,
     * no shuffle.
@@ -442,28 +370,6 @@ object Multimodal {
     }
   }
 
-  /** REAL batched resize for PNG payloads: decode → nearest-neighbor
-    * resample → canonical re-encode (filter-0 rows, single IDAT), md5
-    * of the re-encoded bytes as the output content address. Same
-    * error-tolerance and partition-preservation as
-    * [[decodePngBatched]].
-    */
-  def resizePngBatched(df: DataFrame, idCol: String,
-      outW: Int, outH: Int): Dataset[ResizedImage] =
-    resizeRasterBatched(df, idCol, outW, outH)(
-      PngCodec.decode, img => PngCodec.encode(PngCodec.resizeNearest(img, outW, outH)))
-
-  /** REAL batched resize for PPM payloads: decode → nearest-neighbor
-    * resample to (outW, outH) → canonical re-encode, md5 of the
-    * re-encoded bytes as the output content address. Same
-    * error-tolerance and partition-preservation as
-    * [[decodePpmBatched]].
-    */
-  def resizePpmBatched(df: DataFrame, idCol: String,
-      outW: Int, outH: Int): Dataset[ResizedImage] =
-    resizeRasterBatched(df, idCol, outW, outH)(
-      PpmCodec.decode, img => PpmCodec.encode(PngCodec.resizeNearest(img, outW, outH)))
-
   /** STUB resize + frame-sample over raw payload bytes, batch-shaped
     * (SURVEY §2 q61): the mapPartitions analog of the `mapInPandas`
     * resize/frame-sample stage of a real media pipeline. Per task,
@@ -501,36 +407,12 @@ object Multimodal {
     }
   }
 
-  /** BATCH-shaped decode over raw payload bytes: the Scala analog of a
-    * `mapInPandas` decoder — invoked once per PARTITION with an
-    * iterator over (id, payload) rows, so per-batch setup (a codec
-    * context, a model handle; here the reused MessageDigest) is paid
-    * once per task, not per row, and rows stream through without
-    * materializing the partition. Preserves the input partitioning —
-    * no shuffle. Same stub semantics as [[decodeStub]] (byte-strided
-    * fake frames; swap [[stubFrames]] for a real codec on a cluster
-    * that has one) — MultimodalSpec pins batched ≡ column-pipeline.
-    */
-  def decodeBatchedStub(df: DataFrame, idCol: String): Dataset[MediaFeatures] = {
-    val slim = df.select(col(idCol).cast("long"), col("payload"))
-    import slim.sparkSession.implicits._
-    slim.as[(Long, Array[Byte])].mapPartitions { it =>
-      val hex = md5Hex()
-      it.map { case (id, payload0) =>
-        // NULL -> empty payload, same task-survival rule as the
-        // resize stub above
-        val payload = if (payload0 == null) Array.emptyByteArray else payload0
-        val (n, first) = stubFrames(hex, payload, 64, Long.MaxValue)
-        MediaFeatures(id, payload.length.toLong, hex(payload), n, first)
-      }
-    }
-  }
-
   /** The stub's frame sampling, as [[decodeStub]] spells it in SQL:
     * one frame per 16-byte window starting every `stride` bytes
     * (1-based starts up to max(len − 15, 1), so a short payload is one
     * short frame), at most `maxFrames`. Returns (frame count, md5 of
-    * the first frame): the only frame digest either stage emits.
+    * the first frame): the only frame digest [[resizeFramesBatched]]
+    * emits.
     */
   private def stubFrames(hex: Array[Byte] => String, bytes: Array[Byte],
       stride: Int, maxFrames: Long): (Long, String) = {

@@ -2,10 +2,10 @@ package graft.operators
 
 import java.util.zip.{CRC32, Deflater, Inflater}
 
-/** Pure-JVM codec for PNG images — a second REAL image decoder for the
-  * multimodal tier (alongside [[PpmCodec]]), built from the public PNG
-  * specification (RFC 2083 / W3C PNG): 8-byte signature, length-tagged
-  * CRC-checked chunks, IHDR metadata, zlib-deflated IDAT scanlines,
+/** Pure-JVM codec for PNG images — the REAL image decoder of the
+  * multimodal tier, built from the public PNG specification (RFC
+  * 2083 / W3C PNG): 8-byte signature, length-tagged CRC-checked
+  * chunks, IHDR metadata, zlib-deflated IDAT scanlines,
   * one filter byte per row with the five standard filters (None, Sub,
   * Up, Average, Paeth). The container has no image libraries, but PNG
   * needs only zlib — and `java.util.zip` ships in the JDK.
@@ -30,8 +30,8 @@ object PngCodec {
   /** Guard against decompression bombs: reject images whose raw pixel
     * buffer would exceed 256 MiB — far above any sane payload here and
     * small enough that a hostile header can't OOM an executor. Shared
-    * by the PPM tier and the batch plumbing's pre-resize checks so the
-    * budget can never silently diverge between formats.
+    * with the JPEG tier so the budget can never silently diverge
+    * between formats.
     */
   private[operators] val MaxPixelBytes: Long = 256L << 20
 

@@ -36,24 +36,6 @@ object Sampling {
       .drop("graft_sample_rank")
   }
 
-  /** Keeps `k` rows per stratum, chosen by md5 of `hashKey` (with
-    * `tieBreak` making the order total when hash keys collide —
-    * duplicate content, for instance). The hash decorrelates the
-    * sample from any input ordering; the result is a uniform-ish,
-    * content-addressed, reproducible per-stratum sample. NULL hash
-    * keys rank LAST on both engines (`asc_nulls_last` here, DuckDB's
-    * ASC default in the oracle) — null-content rows only enter the
-    * sample when a stratum has fewer than k hashable rows.
-    *
-    * Convenience form: ranks on md5 computed in place, so whatever
-    * `df` carries rides the rank exchange. For heavy payload columns
-    * prefer hashing first and calling [[stratifiedByKey]] on the slim
-    * projection.
-    */
-  def stratifiedDeterministic(df: DataFrame, strataCol: Column, hashKey: Column,
-      tieBreak: Column, k: Int): DataFrame =
-    stratifiedByKey(df, strataCol, md5(hashKey.cast("string")), tieBreak, k)
-
   /** Deterministic train/val/test split: each row's bucket is decided
     * by comparing md5(`hashKey`) LEXICOGRAPHICALLY against hex-prefix
     * thresholds — pure column arithmetic, no shuffle at all, and the

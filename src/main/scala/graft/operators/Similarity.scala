@@ -96,33 +96,6 @@ object Similarity {
       .filter(col("cos") >= minCosine)
   }
 
-  /** Embedding near-dup RESOLUTION: LSH cosine pairs → connected
-    * components ([[Components]] — min-id label propagation with the
-    * small-graph union-find fast path) → lowest-id survivor per
-    * component. Returns the deduped vector frame — the q45 operation
-    * on the embedding tier, so a training pipeline can drop
-    * semantic near-duplicates, not just report them (DedupSpec pins
-    * survivor structure against the pair graph).
-    *
-    * `bitsPerTable < 0` (the default) auto-sizes the banding from the
-    * corpus count via [[autoBitsPerTable]] — one count job, then
-    * linear candidate volume at any corpus size. The count is
-    * metadata-cheap ONLY for a plain parquet scan (row-group stats);
-    * a derived/joined/filtered frame pays a full extra evaluation
-    * here AND again when the pair generation re-reads `vectors` —
-    * callers with a non-trivial lineage should `.cache()` (or
-    * localCheckpoint) the frame first, or pass bits explicitly
-    * (ADVICE r7).
-    */
-  def dropNearDupVectors(vectors: DataFrame, idCol: String, vCol: String,
-      tables: Int = 16, bitsPerTable: Int = -1, minCosine: Double = 0.9): DataFrame = {
-    val bits =
-      if (bitsPerTable >= 0) bitsPerTable else autoBitsPerTable(vectors.count())
-    val pairs = lshNearDupPairs(vectors, idCol, vCol, tables, bits, minCosine)
-    Components.keepSurvivors(vectors, idCol,
-      Components.label(pairs, "vec_a", "vec_b"))
-  }
-
   /** Lloyd (k-means) refinement of an IVF centroid set, as pure
     * DataFrame ops (VERDICT r3 #4): each iteration assigns every vector
     * to its nearest current centroid via the zero-shuffle native argmax

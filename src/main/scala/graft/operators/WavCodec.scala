@@ -3,7 +3,7 @@ package graft.operators
 import java.nio.{ByteBuffer, ByteOrder}
 
 /** Pure-JVM codec for 16-bit PCM WAV audio — the audio analog of
-  * [[PpmCodec]], built from the public RIFF/WAVE container spec: a
+  * [[PngCodec]], built from the public RIFF/WAVE container spec: a
   * `RIFF` header with form type `WAVE`, then chunks (`fmt ` with
   * audio format 1 = PCM, a `data` chunk with interleaved samples;
   * unknown chunks like `LIST`/`fact` are skipped by their declared
@@ -78,30 +78,6 @@ object WavCodec {
     buf.putInt(0x61746164).putInt(dataLen)
     w.samples.foreach(buf.putShort)
     buf.array()
-  }
-
-  /** Nearest-frame resample to `outRate` — the same index mapping as
-    * [[PngCodec.resizeNearest]] on the time axis, channels kept
-    * interleaved. (A production pipeline would band-limit first; for
-    * feature extraction and plumbing the nearest-frame map is the
-    * deterministic baseline.)
-    */
-  def resampleNearest(w: Wav, outRate: Int): Wav = {
-    require(outRate > 0, "target rate must be positive")
-    val inFrames = w.nFrames
-    val outFrames = math.max((inFrames.toLong * outRate / math.max(w.sampleRate, 1)).toInt, if (inFrames > 0) 1 else 0)
-    val out = new Array[Short](outFrames * w.channels)
-    var f = 0
-    while (f < outFrames) {
-      val src = (f.toLong * inFrames / math.max(outFrames, 1)).toInt
-      var c = 0
-      while (c < w.channels) {
-        out(f * w.channels + c) = w.samples(src * w.channels + c)
-        c += 1
-      }
-      f += 1
-    }
-    Wav(outRate, w.channels, out)
   }
 
   /** Per-channel RMS in [0, 1] — the loudness feature a curation

@@ -50,12 +50,6 @@ object Bootstrap {
   // round(cumPoisson1(k) · 65536) as lowercase hex, k = 0..5
   private val Thresholds = Seq("5e2d", "bc5b", "eb71", "fb24", "ff10", "ffd9")
 
-  /** md5 draw for (key, replicate) — computed ONCE per pair; the
-    * ladder reads the materialized column so neither engine hashes
-    * six times. */
-  def drawOf(key: Column, rep: Column): Column =
-    md5(concat(key.cast("string"), lit(":"), rep.cast("string")))
-
   /** Poisson(1) weight of a uniform hex draw via the threshold ladder. */
   def poissonWeight(u: Column): Column =
     Thresholds.foldLeft(lit(0)) { (acc, t) =>

@@ -1,6 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.Q
 import graft.functions.det.dsum
@@ -69,12 +70,14 @@ object Compaction {
     * while the query's frame is being built, inside `Q.run`, so a
     * traced run counts them as plan construction (`queries.build_s`,
     * `queries.build_jobs`), not as the timed action's execution.
-    * That build runs 10 Spark jobs at sf0.001 (`Inspect --time`
+    * That build runs 8 Spark jobs at sf0.001 (`Inspect --time`
     * prints them): one per append (4; appends do not shuffle), the
-    * compaction's shuffle and write (2) and the result's collect (4).
-    * No store read infers its schema; each reads the store's recorded
-    * `_graft_schema`. A noop action over the result adds one job, 11
-    * in all, pinned in CommittedCompactionSpec.
+    * compaction's shuffle and write (2) and the result's collect (2:
+    * the aggregate's shuffle and its result stage; the rows are sorted
+    * on the driver, not by a global sort). No store read infers its
+    * schema; each reads the store's recorded `_graft_schema`. A noop
+    * action over the result adds one job, 9 in all, pinned in
+    * CommittedCompactionSpec.
     */
   val q254 = Q.of(
     "q254_committed_compaction",
@@ -104,11 +107,14 @@ object Compaction {
     val out = PartitionedStore.readCommitted(t.spark, dir)
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n_events"), dsum(col("value")).as("sum_value"))
-      .orderBy(col("event_type"))
     // materialize the |event_type|-row result BEFORE deleting the
     // store (the returned frame must not depend on the vanished
-    // files), then clean up — nothing leaks into /tmp across runs
+    // files), then clean up — nothing leaks into /tmp across runs.
+    // The few rows are sorted here in Spark's ascending order (nulls
+    // first, then UTF-8 bytes): a global sort would add its own jobs.
+    val byType = Ordering.Option(Ordering.fromLessThan[UTF8String](_.compareTo(_) < 0))
     val rows = out.collect().toSeq
+      .sortBy(r => Option(r.getString(0)).map(UTF8String.fromString))(byType)
     val schema = out.schema
     val p = new org.apache.hadoop.fs.Path(tmpRoot.toString)
     p.getFileSystem(t.spark.sparkContext.hadoopConfiguration).delete(p, true)

@@ -17,16 +17,12 @@ import graft.Q
   * read of a 100 TB column before the first real job), no shuffle
   * until the bounded (type, bucket) rollup. Malformed payloads
   * degrade to NULL fields and are COUNTED per group rather than
-  * killing the job or silently vanishing — the q93/TextIngest
-  * observability contract applied to a column instead of a file
-  * (corpus payloads are all clean, so the oracle pins `n_bad = 0`
-  * rows too; ProfilingSpec feeds broken/missing-key/wrong-type
-  * fixtures to prove the counter counts).
-  *
-  * The file-level twin is `sources/TextIngest` (schema-explicit JSONL
-  * ingest with quarantine); this is the column-level form a reference
-  * user hits when the blob arrives INSIDE an already-structured
-  * table.
+  * killing the job or silently vanishing — the q93 observability
+  * contract applied to a JSON column (corpus payloads are all clean,
+  * so the oracle pins `n_bad = 0` rows too; ProfilingSpec feeds
+  * broken/missing-key/wrong-type fixtures to prove the counter
+  * counts). This is the form a reference user hits when the blob
+  * arrives INSIDE an already-structured table.
   */
 object Json {
 

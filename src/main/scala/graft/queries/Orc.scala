@@ -6,10 +6,9 @@ import graft.Q
 import graft.functions.det.dsum
 
 /** q120: ORC round-trip — the columnar-format INTEROP leg of the io
-  * surface (parquet is the native tier, JSONL/CSV the raw-ingest tier
-  * via `sources/TextIngest`; ORC is the other columnar format a
-  * warehouse migration actually encounters). The query writes orders
-  * as ORC with Spark's built-in datasource, then answers a
+  * surface (parquet is the native tier; ORC is the other columnar
+  * format a warehouse migration actually encounters). The query
+  * writes orders as ORC with Spark's built-in datasource, then answers a
   * status-grain rollup FROM THE ORC COPY — while the DuckDB oracle
   * answers from the original parquet — so the hash compare proves the
   * format round-trip preserved every row, the timestamp semantics,

@@ -329,7 +329,7 @@ object Text {
   }
 
   /** q78: deterministic stratified sample
-    * ([[graft.operators.Sampling.stratifiedDeterministic]]) — the
+    * ([[graft.operators.Sampling.stratifiedByKey]] over md5(text)) — the
     * reproducible "k docs per source" training-mix draw: rows ranked
     * inside each stratum by md5(text) (doc_id tie-break for duplicate
     * content) and the top 10 kept. Content-hash ordering makes the

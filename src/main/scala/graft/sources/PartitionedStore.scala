@@ -149,24 +149,6 @@ object PartitionedStore {
     if (recorded.isEmpty) writePointerText(spark, path, SchemaName, schema.json)
   }
 
-  // ---- atomic multi-partition snapshot publish (VERDICT r10 next #7) ----
-  //
-  // writeBatch/compact are per-leaf-dir atomic only: a reader scanning
-  // DURING a multi-partition publish can see some partitions new and
-  // some old/missing. The snapshot layout closes that gap with the
-  // classic manifest-commit design (the idea under Iceberg/Delta,
-  // re-expressed minimally): each publish writes a COMPLETE hive-
-  // partitioned tree under its own graft_snapshot=<v> directory, then
-  // commits by atomically swapping ONE pointer file. Readers resolve
-  // the pointer first, so they see either the old snapshot whole or
-  // the new snapshot whole — never a mix; an in-flight reader of the
-  // old snapshot keeps a consistent view because publish never
-  // mutates published directories. The single-file rename is atomic
-  // on POSIX/HDFS (FileContext.rename(OVERWRITE)); on S3 the pointer
-  // would live in a conditional-put object or a catalog — same
-  // protocol, different primitive.
-
-  private val ManifestName = "_graft_manifest"
   private val SchemaName = "_graft_schema"
   private val BatchWatermarkName = "_graft_batch_watermark"
   private val CompactionName = "_graft_compaction"
@@ -256,54 +238,21 @@ object PartitionedStore {
       name: String, value: Long): Unit =
     writePointerText(spark, path, name, value.toString)
 
-  /** Currently committed snapshot id, if any publish has completed. */
-  def currentSnapshot(spark: SparkSession, path: String): Option[Long] =
-    readPointer(spark, path, ManifestName)
-
-  /** Stage (write, but do NOT commit) the next snapshot: a complete
-    * partitioned tree under graft_snapshot=<v+1>. Returns the staged
-    * id. A crash after staging leaves an orphan directory that the
-    * next stage of the same id overwrites — readers never resolve it
-    * because the manifest still names the old snapshot (SourcesSpec
-    * pins exactly this interrupted-publish isolation).
-    */
-  def stageSnapshot(df: DataFrame, path: String,
-      partitionCols: Seq[String]): Long = {
-    val spark = df.sparkSession
-    val (root, fs) = fsOf(spark, path)
-    val id = currentSnapshot(spark, path).getOrElse(0L) + 1L
-    val dir = new org.apache.hadoop.fs.Path(root, s"graft_snapshot=$id")
-    if (fs.exists(dir)) fs.delete(dir, true) // abandoned earlier stage
-    val w = df.write.mode("overwrite")
-    (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w)
-      .parquet(dir.toString)
-    id
-  }
-
-  /** Commit a staged snapshot: write the pointer to a temp file, then
-    * ONE atomic rename over the live manifest. This is the only
-    * mutation a reader can race with, and it is all-or-nothing.
-    */
-  def commitSnapshot(spark: SparkSession, path: String, id: Long): Unit = {
-    val (root, fs) = fsOf(spark, path)
-    require(fs.exists(new org.apache.hadoop.fs.Path(root, s"graft_snapshot=$id")),
-      s"commitSnapshot: snapshot $id was never staged under $path")
-    writePointer(spark, path, ManifestName, id)
-  }
-
   // ---- watermark-committed streaming append (round 11) ----
   //
-  // The snapshot protocol above rewrites the table per publish — right
-  // for batch refresh, wrong for a streaming APPEND sink. The append
-  // form is the manifest idea applied to writeBatch's per-batch trees:
-  // batches land (idempotently, delete-and-rewrite on replay) under
+  // The manifest-commit idea (the one under Iceberg/Delta) applied to
+  // writeBatch's per-batch trees: batches land (idempotently,
+  // delete-and-rewrite on replay) under
   // graft_batch_id=<id>, and ONE pointer file holds the highest
   // COMMITTED batch id. A reader filters graft_batch_id <= watermark —
   // a planning-time partition-pruning predicate — so it sees every
   // committed batch whole and never a batch that is mid-write or
   // mid-replay. Because Spark microbatch ids are strictly increasing
   // and writeBatch rewrites exactly its own tree, a single watermark
-  // long IS the full manifest.
+  // long IS the full manifest. The pointer swap is one single-file
+  // rename (`writePointerText`), atomic on POSIX/HDFS; on S3 the
+  // pointer would live in a conditional-put object or a catalog —
+  // same protocol, different primitive.
 
   /** The read schema the store's first [[writeBatch]] recorded. */
   private def storeSchema(spark: SparkSession, path: String): Option[StructType] =
@@ -320,7 +269,8 @@ object PartitionedStore {
   /** Consistent read of a streaming-append store: only batches at or
     * below the committed watermark are visible (partition-pruned at
     * planning time — graft_batch_id is a partition column). Throws if
-    * no batch was ever committed, matching [[readSnapshot]].
+    * no batch was ever committed: an uncommitted store has no
+    * consistent view to offer.
     *
     * Compaction-aware (see [[compactCommitted]]): when a compaction
     * generation is live, batches at or below its covered watermark
@@ -379,7 +329,7 @@ object PartitionedStore {
   /** READER-SAFE compaction of a committed-batch store — the
     * concurrent-reader answer [[compact]]'s delete-and-rename contract
     * explicitly excludes, built from the same manifest-commit idea as
-    * [[publishSnapshot]]: the compacted copy of every batch at or
+    * the watermark: the compacted copy of every batch at or
     * below the current watermark is written WHOLE under a fresh
     * generation directory (`.graft_compacted/<g>` — dot-prefixed, so
     * root partition discovery never sees it), then ONE atomic pointer
@@ -452,8 +402,7 @@ object PartitionedStore {
     * reader that can still resolve a pointer reads a kept generation,
     * and a kept generation serves every batch at or below its own
     * recorded cover, so those root trees are unreachable. The vacuum
-    * half of [[compactCommitted]]'s protocol (same keep-window
-    * contract as [[vacuumSnapshots]]).
+    * half of [[compactCommitted]]'s protocol.
     *
     * The PRE-first-compaction view (pointer absent — the reader scans
     * only root batch trees) counts as GENERATION 0 in the keep
@@ -493,58 +442,6 @@ object PartitionedStore {
           .filter(_.getPath.getName.stripPrefix("graft_batch_id=").toLong <= cov)
           .foreach(s => fs.delete(s.getPath, true))
       }
-    }
-  }
-
-  /** Stage + commit in one call — the normal publish path. */
-  def publishSnapshot(df: DataFrame, path: String,
-      partitionCols: Seq[String]): Long = {
-    val id = stageSnapshot(df, path, partitionCols)
-    commitSnapshot(df.sparkSession, path, id)
-    id
-  }
-
-  /** Read the committed snapshot (pointer resolve + partitioned scan —
-    * planning-time pruning works as in [[readPartitioned]] because the
-    * snapshot dir IS a hive layout). Throws if nothing was ever
-    * committed: an un-published store has no consistent view to offer.
-    */
-  def readSnapshot(spark: SparkSession, path: String): DataFrame = {
-    val id = currentSnapshot(spark, path).getOrElse(
-      throw new IllegalStateException(s"readSnapshot: no committed snapshot at $path"))
-    spark.read.parquet(s"$path/graft_snapshot=$id")
-  }
-
-  /** Time-travel read of a SPECIFIC published snapshot — the reader
-    * form [[vacuumSnapshots]]' keep-window exists for: a long job pins
-    * the id it started on and stays consistent while later publishes
-    * land. Throws if the id was never staged or has been vacuumed.
-    */
-  def readSnapshotAt(spark: SparkSession, path: String, id: Long): DataFrame = {
-    val (root, fs) = fsOf(spark, path)
-    val dir = new org.apache.hadoop.fs.Path(root, s"graft_snapshot=$id")
-    if (!fs.exists(dir))
-      throw new IllegalStateException(
-        s"readSnapshotAt: snapshot $id not present at $path (never staged, or vacuumed)")
-    spark.read.parquet(dir.toString)
-  }
-
-  /** Drop published snapshots older than the live one, keeping
-    * `keep` predecessors for in-flight readers — the vacuum half of
-    * the protocol (time-travel readers would pin ids instead).
-    */
-  def vacuumSnapshots(spark: SparkSession, path: String, keep: Int = 1): Seq[Long] = {
-    val (root, fs) = fsOf(spark, path)
-    currentSnapshot(spark, path).toSeq.flatMap { live =>
-      fs.listStatus(root).toSeq
-        .filter(s => s.isDirectory && s.getPath.getName.startsWith("graft_snapshot="))
-        .map(_.getPath.getName.stripPrefix("graft_snapshot=").toLong)
-        .filter(_ < live - keep)
-        .sorted
-        .map { id =>
-          fs.delete(new org.apache.hadoop.fs.Path(root, s"graft_snapshot=$id"), true)
-          id
-        }
     }
   }
 

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.{ProductQuant, Similarity}
+import graft.operators.{Components, ProductQuant, Similarity}
 import scala.util.Random
 
 /** Fixed-seed differential tests for the vector-similarity tier:
@@ -102,7 +102,7 @@ class AnnDifferentialSpec extends SparkSpec {
     }
   }
 
-  test("dropNearDupVectors keeps exactly the union-find min-id survivors") {
+  test("lshNearDupPairs → keepSurvivors keeps the union-find min-id survivors") {
     val data = vectors(114)
     val minCos = 0.9
     val pairs = (for {
@@ -121,8 +121,11 @@ class AnnDifferentialSpec extends SparkSpec {
     val inComp = pairs.flatMap(p => Seq(p._1, p._2)).toSet
     val expect = data.map(_._1).filter(id =>
       !inComp(id) || id == inComp.filter(x => find(x) == find(id)).min).toSet
-    val kept = Similarity.dropNearDupVectors(
-      data.toDF("id", "v"), "id", "v", tables = 16, bitsPerTable = 4, minCosine = minCos)
+    val df = data.toDF("id", "v")
+    val lshPairs = Similarity.lshNearDupPairs(df, "id", "v",
+      tables = 16, bitsPerTable = 4, minCosine = minCos)
+    val kept = Components.keepSurvivors(df, "id",
+        Components.label(lshPairs, "vec_a", "vec_b"))
       .select("id").collect().map(_.getLong(0)).toSet
     assert(kept == expect,
       s"survivors mismatch: extra=${kept -- expect} missing=${expect -- kept}")

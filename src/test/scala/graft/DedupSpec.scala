@@ -121,26 +121,6 @@ class DedupSpec extends SparkSpec {
     spark.catalog.clearCache()
   }
 
-  test("dropNearDupVectors keeps exactly the component minima of the cosine pair graph") {
-    import graft.operators.{Components, Similarity}
-    val e = tables.embeddings
-      .select(col("vec_id"), vec.toDoubleArr(col("embedding")).as("v"))
-    val pairs = Similarity.lshNearDupPairs(e, "vec_id", "v",
-      tables = 16, bitsPerTable = 4, minCosine = 0.4)
-    val members = pairs.select(col("vec_a").as("id"))
-      .union(pairs.select(col("vec_b").as("id"))).distinct()
-      .collect().map(_.getLong(0)).toSet
-    assert(members.nonEmpty, "fixture sanity: no cosine near-dup pairs")
-    val minima = Components.label(pairs, "vec_a", "vec_b").collect()
-      .map(_.getLong(1)).toSet
-    val kept = Similarity.dropNearDupVectors(e, "vec_id", "v", minCosine = 0.4)
-      .select("vec_id").collect().map(_.getLong(0)).toSet
-    val all = e.select("vec_id").collect().map(_.getLong(0)).toSet
-    assert((all -- members).subsetOf(kept), "an isolated vector was dropped")
-    assert((kept & members) == minima, "survivors are not the component minima")
-    spark.catalog.clearCache()
-  }
-
   test("q44 embedding LSH recall >= 0.7 vs brute-force cosine pairs") {
     val e = tables.embeddings
       .select(col("vec_id"), vec.toDoubleArr(col("embedding")).as("v"))

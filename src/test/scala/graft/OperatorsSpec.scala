@@ -216,11 +216,13 @@ class OperatorsSpec extends SparkSpec {
     }
   }
 
-  test("stratifiedDeterministic: input-order independent, per-stratum capped, reproducible") {
+  test("stratifiedByKey: input-order independent, per-stratum capped, reproducible") {
     import graft.operators.Sampling
     val docs = tables.documents
+    // ranked on a content hash computed first, as q78 does
     def sample(df: org.apache.spark.sql.DataFrame): Set[(String, Long)] =
-      Sampling.stratifiedDeterministic(df, col("source"), col("text"), col("doc_id"), k = 7)
+      Sampling.stratifiedByKey(df.withColumn("h", md5(col("text"))),
+          col("source"), col("h"), col("doc_id"), k = 7)
         .select("source", "doc_id").collect()
         .map(r => (r.getString(0), r.getLong(1))).toSet
     val base = sample(docs)

@@ -107,74 +107,6 @@ class SourcesSpec extends SparkSpec {
     }
   }
 
-  import graft.sources.TextIngest
-
-  test("jsonl ingest round-trips documents and quarantines corrupt lines") {
-    val docs = tables.documents.select("doc_id", "text", "lang", "source", "n_chars")
-    val jdir = java.nio.file.Files.createTempDirectory("graft_jsonl").toString + "/docs"
-    docs.select(to_json(struct(docs.columns.map(col): _*)).as("value"))
-      .write.text(jdir)
-    // inject corrupt lines: truncated json, bare text, and an empty
-    // object is VALID json (parses to an all-null row, not quarantine)
-    val corrupt = Seq("""{"doc_id": 1, "text": "unclosed""", "not json at all")
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(jdir, "part-corrupt.txt"),
-      corrupt.mkString("\n").getBytes("UTF-8"))
-
-    val parsed = TextIngest.readJsonl(spark, jdir, docs.schema)
-    val (good, bad) = TextIngest.split(parsed)
-    assert(bad.collect().map(_.getString(0)).sorted.toSeq == corrupt.sorted,
-      "quarantine must hold exactly the injected raw lines")
-    assert(good.count() == docs.count(), "good-row count changed in round trip")
-    // field-exact: same doc_id/text multiset back
-    assert(good.select("doc_id", "text").exceptAll(docs.select("doc_id", "text")).isEmpty &&
-      docs.select("doc_id", "text").exceptAll(good.select("doc_id", "text")).isEmpty,
-      "jsonl round-trip altered rows")
-  }
-
-  test("gzipped jsonl decodes transparently, corrupt lines still quarantined") {
-    val docs = tables.documents.select("doc_id", "text", "lang", "source", "n_chars")
-    val gdir = java.nio.file.Files.createTempDirectory("graft_jsonl_gz").toString + "/docs"
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(gdir))
-    val lines = docs.select(to_json(struct(docs.columns.map(col): _*)).as("v"))
-      .collect().map(_.getString(0))
-    // two gzip shards + one corrupt line inside the second, like a
-    // truncated crawl shard re-compressed mid-record
-    val (shard1, shard2) = lines.splitAt(lines.length / 2)
-    def writeGz(name: String, ls: Seq[String]): Unit = {
-      val out = new java.util.zip.GZIPOutputStream(
-        java.nio.file.Files.newOutputStream(java.nio.file.Paths.get(gdir, name)))
-      out.write(ls.mkString("\n").getBytes("UTF-8")); out.close()
-    }
-    writeGz("shard-0.jsonl.gz", shard1.toSeq)
-    writeGz("shard-1.jsonl.gz", shard2.toSeq :+ """{"doc_id": 99, "text": "chopped""")
-    val (good, bad) = TextIngest.split(TextIngest.readJsonl(spark, gdir, docs.schema))
-    assert(good.count() == docs.count(), "gz round-trip lost or invented rows")
-    assert(bad.collect().map(_.getString(0)).toSeq ==
-      Seq("""{"doc_id": 99, "text": "chopped"""),
-      "corrupt line inside a gz shard must be quarantined")
-  }
-
-  test("splitToStore: one-pass landing, conformity flag prunes at planning time") {
-    val docs = tables.documents.select("doc_id", "text", "lang", "source", "n_chars")
-    val jdir = java.nio.file.Files.createTempDirectory("graft_jsonl2").toString + "/in"
-    docs.select(to_json(struct(docs.columns.map(col): _*)).as("v")).write.text(jdir)
-    java.nio.file.Files.write(java.nio.file.Paths.get(jdir, "part-bad.txt"),
-      "definitely not json".getBytes("UTF-8"))
-    val out = java.nio.file.Files.createTempDirectory("graft_landed").toString + "/docs"
-    TextIngest.splitToStore(TextIngest.readJsonl(spark, jdir, docs.schema), out)
-    val landed = PartitionedStore.readPartitioned(spark, out)
-    val good = landed.filter(col("graft_is_corrupt") === false)
-    val plan = good.queryExecution.explainString(
-      org.apache.spark.sql.execution.FormattedMode)
-    assert("PartitionFilters: \\[[^\\]]*graft_is_corrupt".r.findFirstIn(plan).isDefined,
-      s"conformity flag not a partition filter:\n$plan")
-    assert(good.count() == docs.count())
-    assert(landed.filter(col("graft_is_corrupt") === true)
-      .select(TextIngest.QuarantineCol).collect().map(_.getString(0)).toSeq ==
-      Seq("definitely not json"))
-  }
-
   test("bucketed tables join and aggregate on the bucket key with zero exchanges") {
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
     val bcast = "spark.sql.autoBroadcastJoinThreshold"
@@ -222,87 +154,6 @@ class SourcesSpec extends SparkSpec {
     }
   }
 
-  test("csv ingest quarantines malformed rows instead of dropping or failing") {
-    val cdir = java.nio.file.Files.createTempDirectory("graft_csv").toString + "/docs"
-    val rows = Seq("1,alpha,10", "2,beta,20", "3,gamma,not_a_number", "4,delta")
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(cdir))
-    java.nio.file.Files.write(java.nio.file.Paths.get(cdir, "part-0.csv"),
-      rows.mkString("\n").getBytes("UTF-8"))
-    val schema = new org.apache.spark.sql.types.StructType()
-      .add("id", org.apache.spark.sql.types.LongType)
-      .add("name", org.apache.spark.sql.types.StringType)
-      .add("n", org.apache.spark.sql.types.LongType)
-    val (good, bad) = TextIngest.split(TextIngest.readCsv(spark, cdir, schema))
-    // row 3 (type mismatch) AND row 4 (missing trailing column) are
-    // both malformed to a schema-explicit CSV read: PERMISSIVE
-    // null-fills what it can but still records the raw line, so the
-    // quarantine is a complete ledger of every non-conforming input
-    assert(bad.collect().map(_.getString(0)).sorted.toSeq ==
-      Seq("3,gamma,not_a_number", "4,delta"),
-      "malformed lines must be quarantined verbatim")
-    assert(good.collect().map(_.getLong(0)).sorted.toSeq == Seq(1L, 2L),
-      "only fully-conforming rows belong in good")
-  }
-
-  test("snapshot publish is all-or-nothing across partitions (interrupted publish invisible)") {
-    // VERDICT r10 next #7: writeBatch/compact are per-leaf-dir atomic
-    // only; the snapshot layout must give readers a consistent
-    // multi-partition view across an INTERRUPTED publish.
-    val sdir = java.nio.file.Files
-      .createTempDirectory("graft_snap").toString + "/store"
-    val v1 = tables.events
-      .select("event_id", "user_id", "ts", "event_type")
-      .filter(col("event_id") % 2 === 0)
-    val id1 = PartitionedStore.publishSnapshot(v1, sdir, Seq("event_type"))
-    assert(id1 == 1L)
-    val seen1 = PartitionedStore.readSnapshot(spark, sdir)
-    val n1 = seen1.count()
-    assert(n1 == v1.count() && n1 > 0)
-
-    // interrupted publish: v2 stages a DIFFERENT multi-partition tree
-    // (more rows, every partition touched) but the publisher "dies"
-    // before commit — a reader must still resolve v1, whole
-    val v2 = tables.events.select("event_id", "user_id", "ts", "event_type")
-    val id2 = PartitionedStore.stageSnapshot(v2, sdir, Seq("event_type"))
-    assert(id2 == 2L)
-    assert(PartitionedStore.currentSnapshot(spark, sdir).contains(1L),
-      "staging moved the live pointer")
-    val during = PartitionedStore.readSnapshot(spark, sdir)
-    assert(during.count() == n1,
-      "reader saw rows from the uncommitted snapshot")
-    assert(during.filter(col("event_id") % 2 =!= 0).isEmpty,
-      "reader saw an uncommitted row — the publish leaked mid-flight")
-
-    // commit is one atomic pointer swap: the new tree appears whole
-    PartitionedStore.commitSnapshot(spark, sdir, id2)
-    assert(PartitionedStore.readSnapshot(spark, sdir).count() == v2.count())
-
-    // partition pruning still works through the snapshot layout
-    val pruned = PartitionedStore.readSnapshot(spark, sdir)
-      .filter(col("event_type") === "purchase")
-    val plan = pruned.queryExecution.explainString(
-      org.apache.spark.sql.execution.FormattedMode)
-    assert("PartitionFilters: \\[[^\\]]*event_type".r.findFirstIn(plan).isDefined,
-      s"event_type predicate did not prune through the snapshot layout:\n$plan")
-
-    // a crashed stage is re-stageable (same id, overwritten) and
-    // vacuum drops superseded snapshots beyond the keep window
-    val id3 = PartitionedStore.stageSnapshot(v1, sdir, Seq("event_type"))
-    assert(id3 == 3L)
-    val id3b = PartitionedStore.stageSnapshot(v1, sdir, Seq("event_type"))
-    assert(id3b == 3L, "re-stage after a crash must reuse the uncommitted id")
-    PartitionedStore.commitSnapshot(spark, sdir, id3b)
-    // a pinned reader can still time-travel to the kept predecessor...
-    assert(PartitionedStore.readSnapshotAt(spark, sdir, 2L).count() == v2.count())
-    assert(PartitionedStore.vacuumSnapshots(spark, sdir, keep = 1) == Seq(1L))
-    assert(PartitionedStore.readSnapshot(spark, sdir).count() == n1)
-    // ...until vacuum drops it past the keep window
-    intercept[IllegalStateException] {
-      PartitionedStore.readSnapshotAt(spark, sdir, 1L)
-    }
-    assert(PartitionedStore.readSnapshotAt(spark, sdir, 2L).count() == v2.count())
-  }
-
   test("watermark-committed append: uncommitted batches invisible, committed batches whole") {
     val adir = java.nio.file.Files
       .createTempDirectory("graft_append").toString + "/store"
@@ -322,10 +173,19 @@ class SourcesSpec extends SparkSpec {
       org.apache.spark.sql.execution.FormattedMode)
     assert("PartitionFilters: \\[[^\\]]*graft_batch_id".r.findFirstIn(plan).isDefined,
       s"watermark did not become a partition filter:\n$plan")
-    // commit batch 1 -> both visible, whole
+    // and a predicate on a store partition column prunes the same way
+    val pruned = seen.filter(col("event_type") === "purchase")
+      .queryExecution.explainString(org.apache.spark.sql.execution.FormattedMode)
+    assert("PartitionFilters: \\[[^\\]]*event_type".r.findFirstIn(pruned).isDefined,
+      s"event_type predicate did not prune through the committed store:\n$pruned")
+    // commit batch 1 -> both visible, whole: the swap replaces the live
+    // pointer in place and leaves no temp file behind
     PartitionedStore.commitBatchWatermark(spark, adir, 1L)
+    assert(PartitionedStore.batchWatermark(spark, adir).contains(1L))
     assert(PartitionedStore.readCommitted(spark, adir).count()
       == b0.count() + b1.count())
+    val leftovers = new java.io.File(adir).list().filter(_.contains(".tmp."))
+    assert(leftovers.isEmpty, s"pointer swap left temps: ${leftovers.toSeq}")
   }
 
   test("z-order row-group skipping beats a 1-D sort on a 2-D box predicate") {

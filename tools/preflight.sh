@@ -7,7 +7,9 @@
 #   tools/preflight.sh --all    # ... oracle-check the WHOLE registry (sf0.001)
 #
 # 1. `sbt compile` + `Test/compile` — a from_json-overload-class error
-#    exits non-zero HERE, before any commit exists.
+#    exits non-zero HERE, before any commit exists. Then
+#    `tools/reach.py` fails on any public main name that only the
+#    specs reach and that its allowlist does not explain.
 # 2. Every query whose defining file changed since HEAD (staged or
 #    not) is re-run through Verify at sf0.001 and hash-compared with
 #    its DuckDB oracle via tools/check.py. New queries are picked up
@@ -25,6 +27,9 @@ VDIR=/tmp/graft_preflight
 
 echo "== preflight: compile (main + test) =="
 sbt -batch compile Test/compile
+
+echo "== preflight: registry reachability =="
+python3 tools/reach.py
 
 if [[ "${1:-}" == "--all" ]]; then
   QUERIES=""
